@@ -12,12 +12,11 @@ import org.apache.spark.sql.functions._
   *     bare count() lets Catalyst prune computed columns and understate
   *     the work (NOTES.md);
   *   - `scaling`: the north-rule two-parallelism evidence — the identical
-  *     PageRank job over a deterministically synthesized transcript graph at
-  *     local[N] vs local[4N] (headline N=4; the 8→32 pair reported as
-  *     `secondary_8_to_32` — see [[Scaling.pairForked]] for why one shared
-  *     DRAM bus caps that pair on this box), each leg in a FRESH JVM
-  *     (a second SparkSession in one JVM measured up to 4x slower), with
-  *     throughput at both and the efficiency (target >= 0.8). Skippable via
+  *     CsrDirect PageRank job over a deterministically synthesized
+  *     transcript graph at local[N] vs local[4N] (N=4,
+  *     [[Scaling.pairForked]]), each leg in a FRESH JVM (a second
+  *     SparkSession in one JVM measured up to 4x slower), with throughput
+  *     at both and the efficiency (target >= 0.8). Skippable via
   *     SPARK_GRAFT_SKIP_SCALING=1 for quick iteration.
   */
 object Bench {

@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Csr, CsrDirect, CsrFast, EdgeDeriver}
+import graft.operators.{CsrDirect, EdgeDeriver}
 import graft.sources.Transcripts
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
@@ -73,14 +73,24 @@ object Scaling {
   // 16-thread leg is the bandwidth-bound one, so it gains the most
   private val NumBlocks =
     sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCKS", "16").toInt
-  private val NumParts =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS", "16").toInt
+
+  // longer conversations → denser link graph (default ≈ avg degree 170 —
+  // denser than the reference's OGB regime on purpose: density sets the
+  // arithmetic per shuffled byte, and the per-iteration work W/8 must
+  // dominate the ~0.1 s/iter stage fixed cost for the scaling bar while the
+  // persisted CSR state still fits the default 20g heap; at avg degree ~7
+  // the O(V) narrow-row plumbing dominates (a memory-bandwidth cost that
+  // cannot scale on one box).
+  private val MaxTurns =
+    sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
 
   private def session(cpus: Int): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", NumParts.toString)
+      // the SQL shuffles (graph derivation, block assembly) use the
+      // block count: the same layout at every parallelism level
+      .config("spark.sql.shuffle.partitions", NumBlocks.toString)
       // the measured loop is the RDD kernel — Kryo for its tuple shuffles
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // force the single-file sort shuffle writer: the default bypass-merge
@@ -139,23 +149,64 @@ object Scaling {
     s
   }
 
+  /** The transcript-derived link graph, synthesized deterministically:
+    * (canonical edges, vertex ids), uncheckpointed.
+    */
+  private def derive(spark: SparkSession, nConv: Long): (DataFrame, DataFrame) = {
+    val ts = Transcripts.synthesize(spark, nConv, maxTurns = MaxTurns)
+    val dict = EdgeDeriver.vertices(ts)
+    (EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict)), dict.select(col("vid")))
+  }
+
+  /** The measured graph as (edges, vertex ids): the prepped parquet tables
+    * under SPARK_GRAFT_SCALE_EDGES_DIR when set, else [[derive]]d here.
+    */
+  private def loadGraph(spark: SparkSession, nConv: Long): (DataFrame, DataFrame) =
+    sys.env.get("SPARK_GRAFT_SCALE_EDGES_DIR") match {
+      case Some(dir) =>
+        // a parquet scan is already a stable, re-scannable leaf — a
+        // checkpoint here would pin ~40 bytes/edge of deserialized rows
+        // in storage memory for zero lineage benefit (the 32-thread leg
+        // OOM'd in prep aggregation with that copy resident)
+        (spark.read.parquet(s"$dir/edges"), spark.read.parquet(s"$dir/vids"))
+      case None =>
+        val (edges, vids) = derive(spark, nConv)
+        // Plans.checkpoint, not raw localCheckpoint: the edges feed a Union
+        // (symmetrize) directly above the checkpointed LogicalRDD — the
+        // Spark 4.1 stale-constraint crash shape (NOTES.md)
+        (graft.plans.Plans.checkpoint(edges), vids)
+    }
+
+  /** Stage-resume check: true when the key file at `path` holds exactly
+    * `key`. A missing or mismatched key file is deleted before returning
+    * false, so the rebuild that follows can never be validated by a stale
+    * key if it crashes half-way through overwriting the tables.
+    */
+  private[graft] def resumeKeyMatches(path: java.nio.file.Path,
+                                      key: String): Boolean = {
+    val ok = java.nio.file.Files.exists(path) &&
+      java.nio.file.Files.readString(path).trim == key
+    if (!ok) java.nio.file.Files.deleteIfExists(path)
+    ok
+  }
+
   /** Synthesize + derive ONCE at full machine parallelism and write the
     * canonical edge/vertex tables as parquet — the measured legs then pay
     * only a columnar scan instead of re-deriving 10^8 turn rows at their
     * own (possibly low) thread count. Also makes "same input at both
-    * cluster sizes" literal: both legs read identical bytes.
+    * cluster sizes" literal: both legs read identical bytes. Then builds
+    * and saves the per-block CsrDirect state the legs load: the routing
+    * build + tiled counting sort cost ~10 min at 4 threads, and the state
+    * is thread-count-independent because the block layout is pinned
+    * across parallelism levels.
     */
   def prepEdges(nConv: Long, outDir: String): Unit = {
     // idempotent: the prep output depends only on this key (the synth
-    // params + block layout + kernel flavor), so back-to-back bench runs
-    // — e.g. the driver's per-round run right after a local confirmation
-    // run — reuse several minutes of untimed-but-real prep wall
-    val prepKey = s"nConv=$nConv turns=${sys.env.getOrElse(
-      "SPARK_GRAFT_SCALE_TURNS", "600")} blocks=$NumBlocks kernel=${sys.env
-      .getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct")}"
+    // params + block layout), so back-to-back bench runs reuse several
+    // minutes of untimed-but-real prep wall
+    val prepKey = s"nConv=$nConv turns=$MaxTurns blocks=$NumBlocks"
     val keyPath = java.nio.file.Paths.get(s"$outDir/prep-key.txt")
-    if (java.nio.file.Files.exists(keyPath) &&
-        java.nio.file.Files.readString(keyPath).trim == prepKey) {
+    if (resumeKeyMatches(keyPath, prepKey)) {
       System.err.println(s"[scaling] prep reused ($prepKey)")
       return
     }
@@ -167,131 +218,71 @@ object Scaling {
       Runtime.getRuntime.availableProcessors().toString).toInt
     val spark = session(prepCpus)
     try {
-      val maxTurns = sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
       // stage-level resume: the synth+derive of the edge/vid tables is the
       // long half of prep (~25 min at 6M convs) and depends only on the
       // synth params — if a previous prep crashed AFTER writing them (e.g.
       // OOM in the state build), reuse them instead of re-deriving
-      val edgesKey = s"nConv=$nConv turns=$maxTurns"
+      val edgesKey = s"nConv=$nConv turns=$MaxTurns"
       val edgesKeyPath = java.nio.file.Paths.get(s"$outDir/edges-key.txt")
-      val haveEdges = java.nio.file.Files.exists(edgesKeyPath) &&
-        java.nio.file.Files.readString(edgesKeyPath).trim == edgesKey
-      if (haveEdges)
+      if (resumeKeyMatches(edgesKeyPath, edgesKey))
         System.err.println(s"[scaling] edge tables reused ($edgesKey)")
       else {
-        val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
-        val dict = EdgeDeriver.vertices(ts)
-        EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))
-          .write.mode("overwrite").parquet(s"$outDir/edges")
-        dict.select(col("vid")).write.mode("overwrite")
-          .parquet(s"$outDir/vids")
+        val (edges, vids) = derive(spark, nConv)
+        edges.write.mode("overwrite").parquet(s"$outDir/edges")
+        vids.write.mode("overwrite").parquet(s"$outDir/vids")
         java.nio.file.Files.writeString(edgesKeyPath, edgesKey + "\n")
       }
-      // "direct" kernel legs load the PREPARED per-block state instead of
-      // rebuilding it: the routing build + tiled counting sort cost ~10
-      // min at 4 threads (untimed, but it is wall-clock the whole bench
-      // pays per leg), and the state is thread-count-independent because
-      // the block layout is pinned across parallelism levels
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct") == "direct") {
-        val edges = spark.read.parquet(s"$outDir/edges")
-        val nE = edges.count()
-        val st = CsrDirect.prepareRows(spark, edges,
-          spark.read.parquet(s"$outDir/vids"), NumBlocks)
-        CsrDirect.saveState(st, s"$outDir/direct-state")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
-        st.unpersistAll()
-      }
+      val edges = spark.read.parquet(s"$outDir/edges")
+      val nE = edges.count()
+      val st = CsrDirect.prepareRows(spark, edges,
+        spark.read.parquet(s"$outDir/vids"), NumBlocks)
+      CsrDirect.saveState(st, s"$outDir/direct-state")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/nedges.txt"), s"$nE\n")
+      st.unpersistAll()
       // written LAST: a crashed prep leaves no key, so the next run redoes
       java.nio.file.Files.writeString(keyPath, prepKey + "\n")
     } finally spark.stop()
   }
 
-  /** One measured run at `cpus` threads: read-or-derive edges, build the
-    * co-partitioned adjacency (all untimed prep), then time exactly `iters`
-    * power iterations — dense-array exchanges only (one per iteration on
-    * the default "direct" kernel), the irreducible communication of
-    * distributed PR.
+  /** One measured run at `cpus` threads: load the prepped CsrDirect state
+    * (or build it from read-or-derived edges; all untimed prep), then time
+    * exactly `iters` power iterations — one dense-array exchange per
+    * iteration, the irreducible communication of distributed PR.
     */
   def run(cpus: Int, nConv: Long, iters: Int, warmupIters: Int = -1): RunResult = {
     val spark = session(cpus)
     try {
-      // longer conversations → denser link graph (SPARK_GRAFT_SCALE_TURNS;
-      // default ≈ avg degree 170 — denser than the reference's OGB regime
-      // on purpose: density sets the arithmetic per shuffled byte, and the
-      // per-iteration work W/8 must dominate the ~0.1 s/iter stage fixed
-      // cost for the scaling bar while the persisted CSR state still fits
-      // the default 20g heap; at avg degree ~7 the O(V) narrow-row plumbing
-      // dominates (a memory-bandwidth cost that cannot scale on one box).
-      val maxTurns = sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
-      val edgesDir = sys.env.get("SPARK_GRAFT_SCALE_EDGES_DIR")
       // prep in its own scope: after it returns, every prep DataFrame ref
       // is dead, so the driver GC below lets the ContextCleaner delete the
       // prep shuffle files — tens of GB that would otherwise pin the tmpfs
       // shuffle dir (and with it, RAM) for the whole session
-      // kernel choice: "direct" (default) = CsrDirect, ONE all-to-all per
-      // iteration (rank state co-located with the out-edge owner blocks) —
-      // half the stage-barrier fixed cost of the two-exchange "fast" path,
-      // which is exactly the term the 8→32 efficiency ratio is sensitive to
-      val kernel = sys.env.getOrElse("SPARK_GRAFT_SCALE_KERNEL", "direct")
-      def prep(): (Int => org.apache.spark.rdd.RDD[(Int, Array[Double])],
-                   () => Unit, Long, Long) = {
-        // Plans.checkpoint, not raw localCheckpoint: the edges feed a Union
-        // (Csr symmetrize) directly above the checkpointed LogicalRDD — the
-        // Spark 4.1 stale-constraint crash shape (NOTES.md)
+      def prep(): (CsrDirect.DirectState, Long) = {
         // fast path: the prep child already built the thread-count-
         // independent per-block state — load it (seconds) instead of
         // re-running the routing/sort build at this leg's thread count
         // (~10 min at local[4])
-        val preBuilt = edgesDir.filter(dir => kernel == "direct" &&
+        val preBuilt = sys.env.get("SPARK_GRAFT_SCALE_EDGES_DIR").filter(dir =>
           java.nio.file.Files.exists(
             java.nio.file.Paths.get(s"$dir/direct-state/meta.txt")))
         preBuilt match {
           case Some(dir) =>
-            val st = CsrDirect.loadState(spark, s"$dir/direct-state")
-            val nE = java.nio.file.Files
-              .readString(java.nio.file.Paths.get(s"$dir/nedges.txt"))
-              .trim.toLong
-            return ((it: Int) => CsrDirect.iterate(st, 0.85, it),
-              () => st.unpersistAll(), st.n, nE)
-          case None => ()
-        }
-        val (edges, dictVids) = edgesDir match {
-          case Some(dir) =>
-            // a parquet scan is already a stable, re-scannable leaf — a
-            // checkpoint here would pin ~40 bytes/edge of deserialized rows
-            // in storage memory for zero lineage benefit (the 32-thread leg
-            // OOM'd in prep aggregation with that copy resident)
-            (spark.read.parquet(s"$dir/edges"),
-              spark.read.parquet(s"$dir/vids"))
+            (CsrDirect.loadState(spark, s"$dir/direct-state"),
+              java.nio.file.Files
+                .readString(java.nio.file.Paths.get(s"$dir/nedges.txt"))
+                .trim.toLong)
           case None =>
-            val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
-            val dict = EdgeDeriver.vertices(ts)
-            (graft.plans.Plans.checkpoint(
-              EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))),
-              dict.select(col("vid")))
-        }
-        val nE = edges.count()
-        // the headline operator: PR over edge-granular balanced CSR blocks —
-        // hub adjacency split across blocks, so no straggler task (P15).
-        // "direct" assembles tiled PreBlocks straight from the edge rows
-        // (prepareRows — the full Csr.Block's long adjacency/weights never
-        // materialize, which is what let assembly OOM at high density);
-        // "fast" is the two-exchange CsrFast loop. PageRankSpec asserts all
-        // kernel paths agree to 1e-12
-        if (kernel == "direct") {
-          val st = CsrDirect.prepareRows(spark, edges, dictVids, NumBlocks)
-          ((it: Int) => CsrDirect.iterate(st, 0.85, it),
-            () => st.unpersistAll(), st.n, nE)
-        } else {
-          val blocks = Csr.buildBalanced(spark, edges, numBlocks = NumBlocks)
-          val st = CsrFast.prepare(spark, blocks, dictVids, numParts = NumParts)
-          ((it: Int) => CsrFast.iterate(st, 0.85, it),
-            () => st.unpersistAll(), st.n, nE)
+            // the headline operator: PR over edge-granular balanced CSR
+            // blocks — hub adjacency split across blocks, so no straggler
+            // task (P15)
+            val (edges, vids) = loadGraph(spark, nConv)
+            val nE = edges.count()
+            (CsrDirect.prepareRows(spark, edges, vids, NumBlocks), nE)
         }
       }
       val tPrep0 = System.nanoTime()
-      val (iterate, unpersist, nV, nE) = prep()
+      val (st, nE) = prep()
+      def iterate(n: Int) = CsrDirect.iterate(st, 0.85, n)
       val prepSec = (System.nanoTime() - tPrep0) / 1e9
       System.err.println(f"[scaling] cpus=$cpus prep=${prepSec}%.2fs")
       // Per-ITERATION timing via stage boundaries: the measured job is one
@@ -426,30 +417,30 @@ object Scaling {
         // nominal iteration count so min-over-trials compares like walls
         dt * iters / math.max(1, done)
       }
-      unpersist()
-      RunResult(cpus, nV, nE, iters, trialSecs.min, trialSecs,
+      st.unpersistAll()
+      RunResult(cpus, st.n, nE, iters, trialSecs.min, trialSecs,
         iterSamples.toSeq, trialMeds.toSeq)
     } finally spark.stop()
   }
 
-  /** Run the pair (cpusLo, cpusHi=4x) IN ONE JVM and report efficiency =
-    * (thrHi/thrLo) / (cpusHi/cpusLo). Quick-iteration only: NOTES.md
-    * measured a second SparkSession in the same JVM up to 4x slower —
-    * headline evidence must come from [[pairForked]].
+  /** GC flags for the children that measure whole-job WALL time or nothing
+    * (prep, partition, nd): G1, no pretouch — GC pause latency is
+    * immaterial there, and ZGC's multi-mapped 40g+ heap overflows
+    * vm.max_map_count on a 128 GB box (fatal map failure).
+    * GCLockerRetryAllocationCount: Spark's lz4 codec holds JNI critical
+    * sections (GCLocker) while the sorters make humongous long[]
+    * allocations — the JDK17 default of 2 retries crashed a 48g run with
+    * "Retried waiting for GCLocker too often".
     */
-  def pair(cpusLo: Int = 8, cpusHi: Int = 32, nConv: Long = 400000L,
-           iters: Int = 8): (RunResult, RunResult, Double) = {
-    val lo = run(cpusLo, nConv, iters)
-    val hi = run(cpusHi, nConv, iters)
-    val eff = (lo.seconds / hi.seconds) / (cpusHi.toDouble / cpusLo)
-    (lo, hi, eff)
-  }
+  private val G1Args = Seq("-XX:+UseG1GC", "-XX:+UnlockDiagnosticVMOptions",
+    "-XX:GCLockerRetryAllocationCount=64")
 
   /** One measured run in a FRESH JVM (the clean-measurement path): spawn
     * `java -cp <this classpath> graft.Scaling` with
     * SPARK_GRAFT_SCALE_CPUS set, inherit this JVM's flags (add-opens, heap),
     * parse the single-run JSON line. Each parallelism level gets its own
-    * heap/JIT — the in-JVM pair() contaminated the second run by up to 4x.
+    * heap/JIT — a second SparkSession in one JVM measured up to 4x slower
+    * (NOTES.md).
     */
   private def fork(env: Map[String, String],
                    gcArgs: Option[Seq[String]] = None): String = {
@@ -553,20 +544,6 @@ object Scaling {
       arr("trial_secs"), arr("iter_ms"), arr("trial_iter_meds"))
   }
 
-  /** The headline two-parallelism evidence: every leg in a fresh JVM over
-    * the SAME parquet input, synthesized once in a full-parallelism prep
-    * child (the low-thread legs re-deriving 10^8 turn rows was pure
-    * untimed wall-clock).
-    *
-    * Headline pair is N=4 → 4N=16 (the driver's rule: "N and 4N cores").
-    * The 8→32 pair is measured and reported alongside as `secondary`: on
-    * THIS one-box sandbox the 32-thread leg saturates the single shared
-    * DRAM bus — at 130M edges the kernel's aggregate task-CPU inflates
-    * ~8% and the single-wave makespan absorbs every straggler, capping
-    * 8→32 at ~0.75 no matter the kernel (a real 4N-executor cluster
-    * brings 4N memory buses and NICs; the sandbox brings one). Both pairs
-    * are emitted so the judge sees the full picture.
-    */
   /** Aggregated two-level result: every fork retained for auditability.
     *
     * Two efficiency statistics:
@@ -582,8 +559,7 @@ object Scaling {
     *     the cross-check and emitted alongside.
     */
   case class PairResult(loForks: Seq[RunResult], hiForks: Seq[RunResult],
-                        cpusLo: Int, cpusHi: Int,
-                        secondary: Option[String] = None) {
+                        cpusLo: Int, cpusHi: Int) {
     def lo: RunResult = loForks.minBy(_.seconds)
     def hi: RunResult = hiForks.minBy(_.seconds)
     private def levelMedMs(rs: Seq[RunResult]): Double = {
@@ -593,7 +569,8 @@ object Scaling {
     def medLoMs: Double = levelMedMs(loForks)
     def medHiMs: Double = levelMedMs(hiForks)
     /** best-two fork-median agreement gap per level (the convergence
-      * statistic the redraw hunt stops on); +inf below 2 finite medians */
+      * statistic the redraw hunt stops on); +inf below 2 finite medians,
+      * NaN when the best two are both 0 */
     private def gap(rs: Seq[RunResult]): Double = {
       val meds = rs.map(_.iterMedianMs).filterNot(_.isNaN).sorted
       if (meds.size < 2) Double.PositiveInfinity
@@ -620,6 +597,11 @@ object Scaling {
     def effCapped: Double = math.min(eff, 1.0)
   }
 
+  /** The headline two-parallelism evidence: every leg in a fresh JVM over
+    * the SAME parquet input, synthesized once in a full-parallelism prep
+    * child (the low-thread legs re-deriving 10^8 turn rows was pure
+    * untimed wall-clock). Headline pair is N=4 → 4N=16 ("N and 4N cores").
+    */
   def pairForked(cpusLo: Int = 4, cpusHi: Int = 16, nConv: Long,
                  iters: Int): PairResult = {
     // the prep dir is KEPT across bench runs (prep-key idempotence in
@@ -646,8 +628,7 @@ object Scaling {
       "SPARK_GRAFT_SCALE_EDGES_DIR" -> edgesDir,
       "SPARK_GRAFT_SCALE_HEAP" ->
         sys.env.getOrElse("SPARK_GRAFT_SCALE_PREP_HEAP", "64g")),
-      gcArgs = Some(Seq("-XX:+UseG1GC", "-XX:+UnlockDiagnosticVMOptions",
-        "-XX:GCLockerRetryAllocationCount=64")))
+      gcArgs = Some(G1Args))
     locally {
       // ALTERNATE the legs across several fresh-JVM forks: the sandbox VM
       // has multi-minute noisy windows (measured trials 3-4x apart within
@@ -745,26 +726,20 @@ object Scaling {
       // and the hunt stops the moment BOTH levels converge — wherever
       // the ratio then lands, in band or not. The target band survives
       // only in diagnostics (logged per redraw).
+      // the forks so far; its gapLo/gapHi are the statistic the JSON emits
+      def sofar = PairResult(loF, hiF, cpusLo, cpusHi)
       def effOpt: Option[Double] =
-        if (loF.isEmpty || hiF.isEmpty) None
-        else Some(PairResult(loF, hiF, cpusLo, cpusHi).eff)
+        if (loF.isEmpty || hiF.isEmpty) None else Some(sofar.eff)
       val convTol =
         sys.env.getOrElse("SPARK_GRAFT_SCALE_CONV_TOL", "0.05").toDouble
-      // best-two agreement gap, +inf while a level has <2 finite medians
-      def convGap(rs: Seq[RunResult]): Double = {
-        val meds = rs.map(_.iterMedianMs).filterNot(_.isNaN).sorted
-        if (meds.size < 2) Double.PositiveInfinity
-        else meds(1) / meds(0) - 1.0
-      }
-      def converged(rs: Seq[RunResult]): Boolean = convGap(rs) <= convTol
       // redraw priority: a level with NO data, then the level further
       // from converging (its min-median is the less trustworthy one)
       def retryCpus: Int =
         if (loF.isEmpty) cpusLo
         else if (hiF.isEmpty) cpusHi
-        else if (convGap(loF) > convGap(hiF)) cpusLo else cpusHi
-      def allConverged: Boolean =
-        loF.nonEmpty && hiF.nonEmpty && converged(loF) && converged(hiF)
+        else if (sofar.gapLo > sofar.gapHi) cpusLo else cpusHi
+      def allConverged: Boolean = loF.nonEmpty && hiF.nonEmpty &&
+        sofar.gapLo <= convTol && sofar.gapHi <= convTol
       // a short 1-trial redraw costs roughly prep + warmup + one trial —
       // ~60% of a full 3-trial leg. For a MIN statistic more independent
       // draws beat more trials per draw, so when the deadline can no
@@ -781,7 +756,7 @@ object Scaling {
           k += 1
           System.err.println(
             f"[scaling] eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
-            f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f " +
+            f"gap(lo)=${sofar.gapLo}%.3f gap(hi)=${sofar.gapHi}%.3f " +
             f"(tol $convTol%.2f, band [$target%.2f, 1.05]) — extra cpus=$c " +
             s"${if (full) "leg" else "SHORT (1-trial) leg"}, fork $k")
           runLeg(k, c, trials = if (full) None else Some(1))
@@ -790,35 +765,12 @@ object Scaling {
       if (!allConverged)
         System.err.println(f"[scaling] emitting UNCONVERGED " +
           f"eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
-          f"gap(lo)=${convGap(loF)}%.3f gap(hi)=${convGap(hiF)}%.3f " +
+          f"gap(lo)=${sofar.gapLo}%.3f gap(hi)=${sofar.gapHi}%.3f " +
           s"(budget: extra=$extra/$maxExtra, " +
           s"fits=${fits(shortLegCost(retryCpus))})")
       require(loF.nonEmpty && hiF.nonEmpty, "every scaling fork at " +
         s"${if (loF.isEmpty) cpusLo else cpusHi} cpus failed — no data to emit")
-      // the 8→32 pair is OPT-IN (SPARK_GRAFT_SCALE_SECONDARY=1): it is
-      // diagnostic only (the one-box DRAM-bus analysis lives in
-      // BASELINE.md) and two extra fresh-JVM legs push the whole bench
-      // against the driver's timeout
-      val secondary =
-        if (!sys.env.get("SPARK_GRAFT_SCALE_SECONDARY").contains("1")) None
-        else try {
-          // same crash tolerance as the primary legs: the secondary pair
-          // is diagnostic only, and a crashed 8/32 child must never
-          // discard the fully-measured primary result (fork indices
-          // continue past the hunt so failure injection cannot collide)
-          val lo8 = runForked(8, nConv, legIters(8), Some(edgesDir),
-            forkIdx = k + 1)
-          val hi32 = runForked(32, nConv, legIters(32), Some(edgesDir),
-            forkIdx = k + 2)
-          Some(json(PairResult(Seq(lo8), Seq(hi32), 8, 32)))
-        } catch { case scala.util.control.NonFatal(e) =>
-          System.err.println("[scaling] secondary 8->32 pair FAILED — " +
-            "emitting primary result without it: " +
-            Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(1).mkString.take(300))
-          None
-        }
-      PairResult(loF, hiF, cpusLo, cpusHi, secondary)
+      PairResult(loF, hiF, cpusLo, cpusHi)
     }
   }
 
@@ -834,88 +786,65 @@ object Scaling {
     // count so min-over-trials compares like walls)
     val ipsLo = if (pr.medLoMs.isNaN) lo.itersPerSec else 1000.0 / pr.medLoMs
     val ipsHi = if (pr.medHiMs.isNaN) hi.itersPerSec else 1000.0 / pr.medHiMs
-    val head =
-      s"""{"cpus_lo":${pr.cpusLo},"cpus_hi":${pr.cpusHi},""" +
-      s""""vertices":${lo.vertices},"edges":${lo.edges},""" +
-      s""""pr_iters":${lo.iters},"pr_iters_hi":${hi.iters},""" +
-      s""""sec_lo":${f"${lo.seconds}%.2f"},"sec_hi":${f"${hi.seconds}%.2f"},""" +
-      s""""iters_per_sec_lo":${f"$ipsLo%.3f"},""" +
-      s""""iters_per_sec_hi":${f"$ipsHi%.3f"},""" +
-      s""""teps_lo":${f"${2.0 * lo.edges * ipsLo}%.0f"},""" +
-      s""""teps_hi":${f"${2.0 * hi.edges * ipsHi}%.0f"},""" +
-      s""""iter_ms_med_lo":${f"${pr.medLoMs}%.1f"},""" +
-      s""""iter_ms_med_hi":${f"${pr.medHiMs}%.1f"},""" +
-      s""""fork_iter_med_lo":${jsonArr(pr.loForks.map(_.iterMedianMs), "%.1f")},""" +
-      s""""fork_iter_med_hi":${jsonArr(pr.hiForks.map(_.iterMedianMs), "%.1f")},""" +
-      s""""trials_lo":${jsonArr(pr.loForks.flatMap(_.trialSecs))},""" +
-      s""""trials_hi":${jsonArr(pr.hiForks.flatMap(_.trialSecs))},""" +
-      // trials actually run per fork: short (1-trial) deadline redraws are
-      // visible here instead of hiding behind the aggregate fork counts
-      s""""fork_trials_lo":${pr.loForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
-      s""""fork_trials_hi":${pr.hiForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
-      s""""forks_lo":${pr.loForks.size},"forks_hi":${pr.hiForks.size},""" +
-      // null when a level has <2 finite fork medians (gap is undefined)
-      s""""conv_gap_lo":${if (pr.gapLo.isInfinite) "null" else f"${pr.gapLo}%.4f"},""" +
-      s""""conv_gap_hi":${if (pr.gapHi.isInfinite) "null" else f"${pr.gapHi}%.4f"},""" +
-      s""""wall_scaling_efficiency":${f"${pr.effWall}%.3f"},""" +
-      s""""protocol":"equal-wall trials (per-trial iters scaled by parallelism); median per-iteration stage time per fork, min of fork medians per level; redraws stop on best-two fork-median convergence (tol 5%), band-blind; wall = min trial normalized per iteration; headline capped at 1.0 (super-unit = lo-leg noise)",""" +
-      s""""scaling_efficiency_raw":${f"${pr.eff}%.3f"},""" +
-      s""""scaling_efficiency":${f"${pr.effCapped}%.3f"}}"""
-    pr.secondary match {
-      case Some(s) => head.dropRight(1) + s""","secondary_8_to_32":$s}"""
-      case None => head
-    }
+    // null when the gap is undefined: <2 finite fork medians (+inf) or
+    // two zero medians (NaN) — neither is valid JSON as a number
+    def gapJson(g: Double) = if (g.isFinite) f"$g%.4f" else "null"
+    s"""{"cpus_lo":${pr.cpusLo},"cpus_hi":${pr.cpusHi},""" +
+    s""""vertices":${lo.vertices},"edges":${lo.edges},""" +
+    s""""pr_iters":${lo.iters},"pr_iters_hi":${hi.iters},""" +
+    s""""sec_lo":${f"${lo.seconds}%.2f"},"sec_hi":${f"${hi.seconds}%.2f"},""" +
+    s""""iters_per_sec_lo":${f"$ipsLo%.3f"},""" +
+    s""""iters_per_sec_hi":${f"$ipsHi%.3f"},""" +
+    s""""teps_lo":${f"${2.0 * lo.edges * ipsLo}%.0f"},""" +
+    s""""teps_hi":${f"${2.0 * hi.edges * ipsHi}%.0f"},""" +
+    s""""iter_ms_med_lo":${f"${pr.medLoMs}%.1f"},""" +
+    s""""iter_ms_med_hi":${f"${pr.medHiMs}%.1f"},""" +
+    s""""fork_iter_med_lo":${jsonArr(pr.loForks.map(_.iterMedianMs), "%.1f")},""" +
+    s""""fork_iter_med_hi":${jsonArr(pr.hiForks.map(_.iterMedianMs), "%.1f")},""" +
+    s""""trials_lo":${jsonArr(pr.loForks.flatMap(_.trialSecs))},""" +
+    s""""trials_hi":${jsonArr(pr.hiForks.flatMap(_.trialSecs))},""" +
+    // trials actually run per fork: short (1-trial) deadline redraws are
+    // visible here instead of hiding behind the aggregate fork counts
+    s""""fork_trials_lo":${pr.loForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
+    s""""fork_trials_hi":${pr.hiForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
+    s""""forks_lo":${pr.loForks.size},"forks_hi":${pr.hiForks.size},""" +
+    s""""conv_gap_lo":${gapJson(pr.gapLo)},"conv_gap_hi":${gapJson(pr.gapHi)},""" +
+    s""""wall_scaling_efficiency":${f"${pr.effWall}%.3f"},""" +
+    s""""protocol":"equal-wall trials (per-trial iters scaled by parallelism); median per-iteration stage time per fork, min of fork medians per level; redraws stop on best-two fork-median convergence (tol 5%), band-blind; wall = min trial normalized per iteration; headline capped at 1.0 (super-unit = lo-leg noise)",""" +
+    s""""scaling_efficiency_raw":${f"${pr.eff}%.3f"},""" +
+    s""""scaling_efficiency":${f"${pr.effCapped}%.3f"}}"""
   }
 
   def main(args: Array[String]): Unit = {
     val nConv = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "6000000").toLong
     val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
-    if (sys.env.get("SPARK_GRAFT_SCALE_MODE").contains("prep")) {
+    val mode = sys.env.get("SPARK_GRAFT_SCALE_MODE")
+    if (mode.contains("prep")) {
       prepEdges(nConv, sys.env("SPARK_GRAFT_SCALE_EDGES_DIR"))
       println("""{"prep":"done"}""")
       return
     }
+    // partition/nd modes run in a properly-heaped child JVM (the parent is
+    // usually sbt with -Xmx4g — the V-cycle at 130M edges OOMs execution
+    // memory there; same lesson as the scaling legs, NOTES.md round 3)
+    if (mode.exists(Set("partition", "nd")) &&
+        !sys.env.get("SPARK_GRAFT_SCALE_INFORK").contains("1")) {
+      print(fork(sys.env.filter(_._1.startsWith("SPARK_GRAFT")) +
+        ("SPARK_GRAFT_SCALE_INFORK" -> "1"), gcArgs = Some(G1Args)))
+      return
+    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS",
+      Runtime.getRuntime.availableProcessors().toString).toInt
     // Whole-V-cycle bench at reference scale (the reference's headline is
     // partitioning a 123.7M-edge graph; ours: the same synthetic link
     // graph the PR kernel scales on). SPARK_GRAFT_SCALE_MODE=partition
     // [+ SPARK_GRAFT_SCALE_EDGES_DIR to reuse a prepped graph].
-    if (sys.env.get("SPARK_GRAFT_SCALE_MODE").contains("partition")) {
-      // fork a properly-heaped child JVM (the parent is usually sbt with
-      // -Xmx4g — the V-cycle at 130M edges OOMs execution memory there;
-      // same lesson as the scaling legs, NOTES.md round 3)
-      if (!sys.env.get("SPARK_GRAFT_SCALE_INFORK").contains("1")) {
-        // G1, no pretouch: this fork measures whole-V-cycle WALL time (GC
-        // pause latency is immaterial), and ZGC's multi-mapped 40g+ heap
-        // overflows vm.max_map_count on this box (fatal map failure).
-        // GCLockerRetryAllocationCount: Spark's lz4 codec holds JNI
-        // critical sections (GCLocker) while the sorters make humongous
-        // long[] allocations — the JDK17 default of 2 retries crashed a
-        // 48g run with "Retried waiting for GCLocker too often"
-        print(fork(sys.env.filter(_._1.startsWith("SPARK_GRAFT")) +
-          ("SPARK_GRAFT_SCALE_INFORK" -> "1"),
-          gcArgs = Some(Seq("-XX:+UseG1GC", "-XX:+UnlockDiagnosticVMOptions",
-            "-XX:GCLockerRetryAllocationCount=64"))))
-        return
-      }
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS",
-        Runtime.getRuntime.availableProcessors().toString).toInt
+    if (mode.contains("partition")) {
       val k = sys.env.getOrElse("SPARK_GRAFT_PART_K", "8").toInt
       val spark = session(cpus)
       try {
-        val (edges, verts) = sys.env.get("SPARK_GRAFT_SCALE_EDGES_DIR") match {
-          case Some(dir) =>
-            (spark.read.parquet(s"$dir/edges"),
-              spark.read.parquet(s"$dir/vids")
-                .select(col("vid"), array(lit(1L)).as("vwgts")))
-          case None =>
-            val maxTurns =
-              sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
-            val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
-            val dict = EdgeDeriver.vertices(ts)
-            (graft.plans.Plans.checkpoint(
-              EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))),
-              dict.select(col("vid"), array(lit(1L)).as("vwgts")))
-        }
+        val (edges, vids) = loadGraph(spark, nConv)
+        val verts = vids.select(col("vid"), array(lit(1L)).as("vwgts"))
         val nE = edges.count(); val nV = verts.count()
         val t0 = System.nanoTime()
         val r = graft.partitioner.Multilevel.partitionMC(
@@ -935,35 +864,12 @@ object Scaling {
     //    the SFG distributed path (greedy flow + gathered SFM) is the one
     //    measured]. Emits permutation-validity fields next to the wall so
     //    the bench row is self-checking.
-    if (sys.env.get("SPARK_GRAFT_SCALE_MODE").contains("nd")) {
-      if (!sys.env.get("SPARK_GRAFT_SCALE_INFORK").contains("1")) {
-        // same child-JVM shape as partition mode: wall-time measurement,
-        // G1 (latency immaterial), GCLocker retries for lz4-vs-humongous
-        print(fork(sys.env.filter(_._1.startsWith("SPARK_GRAFT")) +
-          ("SPARK_GRAFT_SCALE_INFORK" -> "1"),
-          gcArgs = Some(Seq("-XX:+UseG1GC", "-XX:+UnlockDiagnosticVMOptions",
-            "-XX:GCLockerRetryAllocationCount=64"))))
-        return
-      }
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS",
-        Runtime.getRuntime.availableProcessors().toString).toInt
+    if (mode.contains("nd")) {
       val spark = session(cpus)
       try {
         sys.env.get("SPARK_GRAFT_VSEP_MAXGATHER").foreach(g =>
           spark.conf.set("spark.graft.vsep.maxGather", g))
-        val (edges, verts) = sys.env.get("SPARK_GRAFT_SCALE_EDGES_DIR") match {
-          case Some(dir) =>
-            (spark.read.parquet(s"$dir/edges"),
-              spark.read.parquet(s"$dir/vids").select(col("vid")))
-          case None =>
-            val maxTurns =
-              sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
-            val ts = Transcripts.synthesize(spark, nConv, maxTurns = maxTurns)
-            val dict = EdgeDeriver.vertices(ts)
-            (graft.plans.Plans.checkpoint(
-              EdgeDeriver.simpleGraph(EdgeDeriver.edges(ts, dict))),
-              dict.select(col("vid")))
-        }
+        val (edges, verts) = loadGraph(spark, nConv)
         val nE = edges.count(); val nV = verts.count()
         val collectThreshold =
           sys.env.getOrElse("SPARK_GRAFT_ND_COLLECT", "4096").toLong
@@ -1004,13 +910,10 @@ object Scaling {
           s""""trial_secs":${jsonArr(r.trialSecs)},""" +
           s""""trial_iter_meds":${jsonArr(r.trialIterMeds, "%.1f")},""" +
           s""""iter_ms":${jsonArr(r.iterMs, "%.1f")}}""")
-      case None if sys.env.get("SPARK_GRAFT_SCALE_FORKED").contains("1") =>
+      case None =>
         val cpusLo = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "4").toInt
         println(json(pairForked(cpusLo = cpusLo, cpusHi = 4 * cpusLo,
           nConv = nConv, iters = iters)))
-      case None =>
-        val (lo, hi, _) = pair(nConv = nConv, iters = iters)
-        println(json(PairResult(Seq(lo), Seq(hi), lo.cpus, hi.cpus)))
     }
   }
 }

@@ -17,31 +17,19 @@ import scala.collection.mutable
   *     than the quota still lands whole in one block;
   *   - [[buildBalanced]] — edge-granular ([[GraphOps.edgeBalancedSym]]):
   *     hub adjacency is SPLIT across blocks, so no task exceeds the quota —
-  *     the skew-proof layout the scaling bench uses (north rule P15).
-  *     A vertex may then appear in several blocks with partial adjacency;
-  *     consumers aggregate across blocks (PR contributions already do).
+  *     the skew-proof layout [[CsrDirect]] assembles its blocks in (north
+  *     rule P15). A vertex may then appear in several blocks with partial
+  *     adjacency; consumers aggregate across blocks.
   */
 object Csr {
 
-  /** non-negative v mod m */
-  @inline private def pmodInt(v: Long, m: Int): Int = {
-    val r = (v % m).toInt
-    if (r < 0) r + m else r
-  }
-
-  /** One CSR slice. `dstVids`/`adjLocal` are the block-local destination
-    * dictionary: `adjncy(j) == dstVids(adjLocal(j))` — precomputed at build
-    * so per-iteration kernels accumulate into primitive arrays indexed by
-    * `adjLocal` (zero allocation per edge; a boxed per-edge map measured as
-    * a GC collapse at scale).
+  /** One CSR slice: `vids(i)`'s adjacency is `adjncy(xadj(i) until
+    * xadj(i + 1))` with weights `wgts` at the same positions.
     */
   case class Block(blockId: Int, vids: Array[Long], xadj: Array[Int],
-                   adjncy: Array[Long], wgts: Array[Long],
-                   dstVids: Array[Long], adjLocal: Array[Int]) {
+                   adjncy: Array[Long], wgts: Array[Long]) {
     def nvtxs: Int = vids.length
-    // adjLocal, not adjncy: kernels strip the global-id adjacency from
-    // persisted state (CsrFast) and nedges must survive that
-    def nedges: Int = adjLocal.length
+    def nedges: Int = adjncy.length
   }
 
   /** mapPartitions CSR assembly over (blockId, src, dst, wgt) rows sorted by
@@ -80,26 +68,7 @@ object Csr {
         val xadj = new Array[Int](degsA.length + 1)
         var i = 0
         while (i < degsA.length) { xadj(i + 1) = xadj(i) + degsA(i); i += 1 }
-        // dstVids = sorted distinct destinations (primitive sort + unique
-        // scan; Array.distinct/sorted box per element)
-        val sortedAdj = adj.clone()
-        java.util.Arrays.sort(sortedAdj)
-        var n = 0
-        i = 0
-        while (i < sortedAdj.length) {
-          if (n == 0 || sortedAdj(i) != sortedAdj(n - 1)) {
-            sortedAdj(n) = sortedAdj(i); n += 1
-          }
-          i += 1
-        }
-        val dstVids = java.util.Arrays.copyOf(sortedAdj, n)
-        val adjLocal = new Array[Int](adj.length)
-        i = 0
-        while (i < adj.length) {
-          adjLocal(i) = java.util.Arrays.binarySearch(dstVids, adj(i))
-          i += 1
-        }
-        out += Block(curBlock, vidsA, xadj, adj, wgtsA, dstVids, adjLocal)
+        out += Block(curBlock, vidsA, xadj, adj, wgtsA)
         curSrc = Long.MinValue
         curDeg = 0
       }
@@ -136,30 +105,6 @@ object Csr {
                     numBlocks: Int): Dataset[Block] =
     assemble(spark, GraphOps.edgeBalancedSym(edges, numBlocks), numBlocks)
 
-  // Four gate queries (q_pagerank_csr/fast/direct, q_csr_edge_stats)
-  // consume the SAME balanced block layout for the same (session, sf)
-  // inputs; rebuilding it per query re-ran the |E|-row per-src window +
-  // prefix sums + assembly four times (~19 s each at sf0.1). Memoize the
-  // persisted blocks like EventsGraph memoizes the gate graph.
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Dataset[Block]]()
-
-  /** [[buildBalanced]], memoized per (session, cacheKey, numBlocks) and
-    * persisted MEMORY_AND_DISK. `cacheKey` must identify the edge input
-    * (the gate passes the sf dir). Entries of stopped sessions are purged.
-    */
-  def buildBalancedCached(spark: SparkSession, edges: DataFrame,
-                          numBlocks: Int, cacheKey: String): Dataset[Block] = {
-    val it = memo.keySet.iterator()
-    while (it.hasNext) if (it.next()._1.sparkContext.isStopped) it.remove()
-    memo.computeIfAbsent((spark, cacheKey, numBlocks), _ => {
-      val ds = buildBalanced(spark, edges, numBlocks)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds.foreach(_ => ()) // materialize once, here, not per consumer
-      ds
-    })
-  }
-
   /** Per-block stats (the lineage/debug view; also the oracle-checked
     * query surface for the CSR layout).
     */
@@ -170,226 +115,4 @@ object Csr {
       .groupBy(col("block_id"))
       .agg(sum(col("nvtxs")).as("nvtxs"), sum(col("nedges")).as("nedges"))
   }
-
-  /** PageRank power iteration over CSR blocks, engineered so the per-
-    * iteration data movement is O(V) narrow rank rows plus batched
-    * contribution arrays — never the CSR arrays themselves. Correct for
-    * split vertices ([[buildBalanced]]): wdeg is aggregated globally across
-    * blocks, and per-block partial contributions merge in the final
-    * reduce-partition map.
-    */
-  /** Prepared, persisted per-iteration state. `blocksRdd` holds the CSR
-    * blocks as DESERIALIZED JVM objects in the SQL hash(blockId) layout:
-    * caching them as Dataset rows re-paid the columnar decode of every
-    * adjacency array on EVERY iteration (~40-65 CPU-s/iter at 30M edges).
-    * Decoded once here, the kernel walks primitive arrays in place.
-    */
-  case class PrState(blocksRdd: org.apache.spark.rdd.RDD[Block],
-                     wdeg: DataFrame, vidBlock: DataFrame, verts: DataFrame,
-                     n: Long, nBlocks: Int, numParts: Int) {
-    def unpersistAll(): Unit = {
-      wdeg.unpersist(); vidBlock.unpersist()
-      blocksRdd.unpersist(); verts.unpersist()
-    }
-  }
-
-  def prepare(spark: SparkSession, blocks: Dataset[Block], vertices: DataFrame,
-              numParts: Int = 32): PrState = {
-    import spark.implicits._
-    val verts = vertices.select(col("vid")).distinct()
-      .repartition(numParts, col("vid")).persist()
-    val n = verts.count()
-    val nBlocks = blocks.select(max(col("blockId"))).head().getInt(0) + 1
-    // SQL-hash layout (murmur3(blockId) % nBlocks) so the per-iteration
-    // shares Dataset — repartitioned identically — zips partition-for-
-    // partition with no join at all
-    val blocksRdd = blocks.repartition(nBlocks, col("blockId")).rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    blocksRdd.count()
-    // global weighted out-degree: per-block partial sums, then merge
-    // (a vertex may be split across blocks)
-    val wdeg = blocksRdd.flatMap { b =>
-      b.vids.indices.iterator.map { i =>
-        var s = 0L
-        var j = b.xadj(i)
-        while (j < b.xadj(i + 1)) { s += b.wgts(j); j += 1 }
-        (b.vids(i), s)
-      }
-    }.toDF("vid", "w").groupBy(col("vid")).agg(sum(col("w")).as("wdeg"))
-      .repartition(numParts, col("vid")).persist()
-
-    // vid -> owning blocks (1..k rows per vid), computed once; partitioned
-    // like the rank table so the per-iteration join needs no exchange
-    val vidBlock = blocksRdd
-      .flatMap(b => b.vids.iterator.map(v => (v, b.blockId)))
-      .toDF("vid", "blockId").repartition(numParts, col("vid")).persist()
-    wdeg.count(); vidBlock.count()
-    PrState(blocksRdd, wdeg, vidBlock, verts, n, nBlocks, numParts)
-  }
-
-  /** `iters` power iterations over prepared state.
-    *
-    * Per-iteration structure (the profile that motivated each piece is in
-    * NOTES.md "round 2"):
-    *   1. shares = ranks ⋈ wdeg ⋈ vidBlock (codegen joins over O(V) narrow
-    *      rows) repartitioned to the blocks' hash(blockId) layout;
-    *   2. kernel: zipPartitions of the deserialized Block objects with the
-    *      shares rows — no Dataset join, no columnar decode, no
-    *      collect_list boxing; contributions accumulate into primitive
-    *      arrays via the precomputed block-local dst dictionary;
-    *   3. contributions travel as ONE array row per (block, reduce
-    *      partition) — a per-destination row shuffle paid ~3 µs/row × O(E)
-    *      rows of pure memory-bandwidth overhead, exactly what refuses to
-    *      scale on one box;
-    *   4. an open-addressed primitive map merges the batches per reduce
-    *      partition (~V/numParts keys, cache-resident).
-    *
-    * `checkpointEvery`: materialize the rank table every k iterations
-    * (lineage/plan-depth bound); 0 = fully lazy.
-    */
-  def iterate(spark: SparkSession, st: PrState, damping: Double,
-              iters: Int, checkpointEvery: Int = 1): DataFrame = {
-    import spark.implicits._
-    val PrState(blocksRdd, wdeg, vidBlock, verts, n, nBlocks, numParts) = st
-    // iterate over CONNECTED vertices only (wdeg's key set): in a symmetric
-    // graph every connected vertex receives a positive contribution each
-    // round, so no per-iteration left join against the full vertex set is
-    // needed; isolated vertices hold the constant (1-d)/n and are appended
-    // once at the end.
-    var ranks = wdeg.select(col("vid")).withColumn("rank", lit(1.0 / n))
-    for (it <- 1 to iters) {
-      val sharesRdd = vidBlock
-        .join(ranks.join(wdeg, "vid"), "vid")
-        .select(col("blockId"), col("vid"),
-          (col("rank") / col("wdeg")).cast("double").as("share"))
-        .repartition(nBlocks, col("blockId"))
-        .as[(Int, Long, Double)].rdd
-      val contribBatches = blocksRdd.zipPartitions(sharesRdd) { (bIt, sIt) =>
-        val bs = bIt.toArray
-        if (bs.isEmpty) Iterator.empty
-        else {
-          val byId = new java.util.HashMap[Integer, Integer]()
-          bs.zipWithIndex.foreach { case (b, i) => byId.put(b.blockId, i) }
-          val share = bs.map(b => new Array[Double](b.nvtxs))
-          sIt.foreach { case (bid, vid, sh) =>
-            val bi = byId.get(bid)
-            if (bi != null) {
-              val b = bs(bi)
-              val idx = java.util.Arrays.binarySearch(b.vids, vid)
-              if (idx >= 0) share(bi)(idx) = sh
-            }
-          }
-          bs.iterator.zipWithIndex.flatMap { case (b, bi) =>
-            // all-primitive kernel: contributions accumulate into a
-            // double[] indexed by the precomputed block-local dst
-            // dictionary — no per-edge allocation (a boxed map here
-            // measured as GC collapse/OOM)
-            val sh = share(bi)
-            val acc = new Array[Double](b.dstVids.length)
-            var i = 0
-            while (i < b.nvtxs) {
-              val s = sh(i)
-              if (s != 0.0) {
-                var j = b.xadj(i)
-                while (j < b.xadj(i + 1)) {
-                  acc(b.adjLocal(j)) += s * b.wgts(j)
-                  j += 1
-                }
-              }
-              i += 1
-            }
-            // batched emission: one array row per (block, reduce partition)
-            val counts = new Array[Int](numParts)
-            var k = 0
-            while (k < acc.length) {
-              if (acc(k) != 0.0) counts(pmodInt(b.dstVids(k), numParts)) += 1
-              k += 1
-            }
-            val outV = Array.tabulate(numParts)(p => new Array[Long](counts(p)))
-            val outP = Array.tabulate(numParts)(p => new Array[Double](counts(p)))
-            java.util.Arrays.fill(counts, 0)
-            k = 0
-            while (k < acc.length) {
-              if (acc(k) != 0.0) {
-                val p = pmodInt(b.dstVids(k), numParts)
-                outV(p)(counts(p)) = b.dstVids(k)
-                outP(p)(counts(p)) = acc(k)
-                counts(p) += 1
-              }
-              k += 1
-            }
-            (0 until numParts).iterator
-              .filter(p => outV(p).length > 0)
-              .map(p => (p, outV(p), outP(p)))
-          }
-        }
-      }
-      val contribs = contribBatches.toDF("rp", "vids", "partials")
-        .repartition(numParts, col("rp"))
-        // merge the array batches in an open-addressed primitive map —
-        // ~|V|/numParts distinct keys per task, cache-resident
-        .mapPartitions { it =>
-          var cap = 1 << 16
-          var mask = cap - 1
-          var keys = new Array[Long](cap)
-          var vals = new Array[Double](cap)
-          var used = new Array[Boolean](cap)
-          var size = 0
-          def grow(): Unit = {
-            val ok = keys; val ov = vals; val ou = used
-            cap <<= 1; mask = cap - 1
-            keys = new Array[Long](cap); vals = new Array[Double](cap)
-            used = new Array[Boolean](cap)
-            var i = 0
-            while (i < ok.length) {
-              if (ou(i)) {
-                var h = (ok(i) * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
-                while (used(h)) h = (h + 1) & mask
-                keys(h) = ok(i); vals(h) = ov(i); used(h) = true
-              }
-              i += 1
-            }
-          }
-          def add(k: Long, v: Double): Unit = {
-            var h = (k * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
-            while (used(h) && keys(h) != k) h = (h + 1) & mask
-            if (!used(h)) {
-              used(h) = true; keys(h) = k; vals(h) = v; size += 1
-              if (size * 2 > cap) grow()
-            } else vals(h) += v
-          }
-          it.foreach { r =>
-            val vs = r.getSeq[Long](1)
-            val ps = r.getSeq[Double](2)
-            var i = 0
-            while (i < vs.length) { add(vs(i), ps(i)); i += 1 }
-          }
-          (0 until cap).iterator.filter(used(_))
-            .map(h => (keys(h), vals(h)))
-        }.toDF("vid", "contrib")
-      val next = contribs.select(col("vid"),
-        (lit((1 - damping) / n) +
-          lit(damping) * col("contrib")).as("rank"))
-      ranks =
-        // Plans.checkpoint, not raw localCheckpoint: a consumer that unions
-        // the returned ranks would hit Spark 4.1's stale-constraint crash
-        // (UnionBase.rewriteConstraints; see Plans.checkpoint scaladoc)
-        if (checkpointEvery > 0 && it % checkpointEvery == 0)
-          graft.plans.Plans.checkpoint(next)
-        else next
-    }
-    verts.join(ranks, Seq("vid"), "left")
-      .select(col("vid"),
-        coalesce(col("rank"), lit((1 - damping) / n)).as("rank"))
-  }
-
-  def pageRank(spark: SparkSession, blocks: Dataset[Block], vertices: DataFrame,
-               damping: Double = 0.85, iters: Int = 10,
-               numParts: Int = 32): DataFrame = {
-    val st = prepare(spark, blocks, vertices, numParts)
-    val ranks = iterate(spark, st, damping, iters)
-    st.unpersistAll()
-    ranks
-  }
-
 }

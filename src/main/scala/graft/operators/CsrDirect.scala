@@ -2,19 +2,15 @@ package graft.operators
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Single-exchange-per-iteration PageRank over CSR blocks — the owner-
-  * computes variant of [[CsrFast]].
+/** PageRank over edge-balanced CSR blocks with ONE exchange per iteration.
   *
-  * [[CsrFast]] is the classic row/column decomposition: ranks live in hash
-  * partitions, every iteration pays TWO exchanges (rank shares rp→block,
-  * contributions block→rp). This kernel co-locates rank state with the
-  * block that owns the vertex's out-edges (the reference's own layout: each
-  * thread owns its vertices' rank slots AND their adjacency slice,
-  * reference src/graph.c:1369-1454), so one iteration is exactly ONE
-  * exchange:
+  * Each block owns its vertices' rank slots AND their out-edge slice — the
+  * reference's own layout (each thread owns its vertices' rank slots and
+  * their adjacency slice, reference src/graph.c:1369-1454). One iteration
+  * is one stage followed by one all-to-all:
   *
   *   kernel+update (one stage): merge incoming contribution arrays
   *   (producer-block order — deterministic double sums), apply the damping
@@ -23,17 +19,18 @@ import org.apache.spark.sql.functions._
   *   arrays, and emit one dense double[] per consumer block via
   *   precomputed index routing.
   *
-  * Halving the stage-barrier count halves the per-iteration fixed cost —
-  * on a 1000-executor cluster that is one all-to-all per iteration instead
-  * of two, the textbook distributed PR communication lower bound for a
-  * 1-D edge partitioning. Message volume is unchanged vs [[CsrFast]]
-  * (Σ|block dst dictionaries| partial sums either way; a split vertex —
-  * hub adjacency divided across blocks, [[Csr.buildBalanced]] — receives
-  * every producer's partial at EVERY owning block, and each owner merges
-  * the identical sorted stream, so split copies agree bit-for-bit).
+  * One all-to-all per iteration is the textbook communication lower bound
+  * of distributed PR under a 1-D edge partitioning; rank state kept apart
+  * from the adjacency (hash-partitioned by vid) costs a second exchange
+  * and stage barrier every iteration (NOTES.md round 3 measured it slower
+  * at every thread count). Blocks come from [[GraphOps.edgeBalancedSym]],
+  * which splits hub adjacency across blocks: a split vertex receives every
+  * producer's partial at EVERY owning block, and each owner merges the
+  * identical sorted stream, so split copies agree bit-for-bit.
   *
-  * PageRankSpec gates all kernel paths against the same dense in-JVM
-  * oracle; q_pagerank_direct gates this one against the DuckDB oracle.
+  * PageRankSpec checks this engine against the dense in-JVM oracle and the
+  * DataFrame spec [[PageRank]]; q_pagerank_direct gates [[pageRank]] against
+  * the DuckDB oracle.
   */
 object CsrDirect {
 
@@ -57,9 +54,9 @@ object CsrDirect {
     */
   private val TileBits = 16
 
-  /** The block's compute state, built INLINE from [[Csr.Block]] during
-    * assembly so the full block (8-byte global adjacency + 8-byte weights
-    * = 16 B per directed edge the kernel never reads) is never cached:
+  /** The block's compute state, assembled straight from the edge rows
+    * ([[assemblePre]]) so the 8-byte global adjacency + 8-byte weights
+    * (16 B per directed edge the kernel never reads) are never cached:
     *
     *   - `srcT`/`dstT`/`wT`: the edges in destination-TILED order —
     *     counting-sorted by `dstLocal >> TileBits` (stable, so within a
@@ -69,45 +66,13 @@ object CsrDirect {
     *     `vids`, `dstT` indexes `dstVids`; weights are 4-byte
     *     (range-checked at build);
     *   - `wdegLoc`: this block's weighted out-degree per `vids` slot
-    *     (summed globally across split copies in [[prepare]]).
+    *     (summed globally across split copies in [[prepareFromPre]]).
     */
   final case class PreBlock(blockId: Int, vids: Array[Long],
                             dstVids: Array[Long],
                             srcT: Array[Int], dstT: Array[Int], wT: Array[Int],
                             wdegLoc: Array[Long]) {
     def nvtxs: Int = vids.length
-  }
-
-  private def toPre(b: Csr.Block): PreBlock = {
-    val nE = b.adjLocal.length
-    val nTiles = (b.dstVids.length >> TileBits) + 1
-    val pos = new Array[Int](nTiles)
-    var j = 0
-    while (j < nE) { pos(b.adjLocal(j) >> TileBits) += 1; j += 1 }
-    var run = 0
-    var t = 0
-    while (t < nTiles) { val c = pos(t); pos(t) = run; run += c; t += 1 }
-    val srcT = new Array[Int](nE)
-    val dstT = new Array[Int](nE)
-    val wT = new Array[Int](nE)
-    val wdegLoc = new Array[Long](b.nvtxs)
-    var i = 0
-    while (i < b.nvtxs) {
-      j = b.xadj(i)
-      while (j < b.xadj(i + 1)) {
-        val d = b.adjLocal(j)
-        val w = b.wgts(j)
-        require(w >= Int.MinValue && w <= Int.MaxValue,
-          s"edge weight $w exceeds Int range (CsrDirect packs weights as 4-byte ints)")
-        wdegLoc(i) += w
-        val p = pos(d >> TileBits)
-        pos(d >> TileBits) = p + 1
-        srcT(p) = i; dstT(p) = d; wT(p) = w.toInt
-        j += 1
-      }
-      i += 1
-    }
-    PreBlock(b.blockId, b.vids, b.dstVids, srcT, dstT, wT, wdegLoc)
   }
 
   /** PreBlock + routing:
@@ -365,29 +330,16 @@ object CsrDirect {
     }
   }
 
-  /** Large-graph entry point: edge-balanced blocks assembled directly into
-    * tiled PreBlocks (see [[assemblePre]]).
+  /** Edge-balanced blocks ([[GraphOps.edgeBalancedSym]]) assembled directly
+    * into tiled PreBlocks (see [[assemblePre]]), then routed.
+    * `vertices` supplies the FULL vertex set (isolated vertices included):
+    * the damping base (1-d)/n counts them.
     */
   def prepareRows(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
                   numBlocks: Int): DirectState =
     prepareFromPre(spark,
       assemblePre(spark, GraphOps.edgeBalancedSym(edges, numBlocks), numBlocks),
       vertices, numBlocks)
-
-  /** `vertices` supplies the FULL vertex set (isolated vertices included):
-    * the damping base (1-d)/n counts them, exactly as [[Csr.prepare]] does.
-    * `numBlocksHint`: pass the builder's block count to skip an extra
-    * assembly pass just to find max(blockId).
-    */
-  def prepare(spark: SparkSession, blocks: Dataset[Csr.Block],
-              vertices: DataFrame, numBlocksHint: Int = -1): DirectState = {
-    val nBlocks =
-      if (numBlocksHint > 0) numBlocksHint
-      else blocks.select(max(col("blockId"))).head().getInt(0) + 1
-    // tiled pre-state built inline: the full Block is a per-task transient
-    prepareFromPre(spark, blocks.rdd.map(b => (b.blockId, toPre(b))),
-      vertices, nBlocks)
-  }
 
   private def prepareFromPre(spark: SparkSession,
                              preRdd: RDD[(Int, PreBlock)],
@@ -593,8 +545,8 @@ object CsrDirect {
         }
     }
 
-  /** (vid, rank) DataFrame over ALL vertices — same contract as
-    * [[CsrFast.toRanksDf]]: isolated vertices get the damping base.
+  /** (vid, rank) DataFrame over ALL vertices: isolated vertices get the
+    * damping base (1-d)/n, as in [[PageRank.fixedIterations]].
     */
   def toRanksDf(spark: SparkSession, st: DirectState, damping: Double,
                 blockRanks: RDD[(Int, Array[Double])],
@@ -607,12 +559,14 @@ object CsrDirect {
         coalesce(col("rank"), lit((1.0 - damping) / st.n)).as("rank"))
   }
 
-  /** End-to-end wrapper, same contract as [[CsrFast.pageRank]]. */
-  def pageRank(spark: SparkSession, blocks: Dataset[Csr.Block],
-               vertices: DataFrame, damping: Double = 0.85,
+  /** End-to-end (vid, rank) over ALL vertices: [[prepareRows]], `iters`
+    * iterations, [[toRanksDf]]. The path q_pagerank_direct gates.
+    */
+  def pageRank(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
+               numBlocks: Int, damping: Double = 0.85,
                iters: Int = 10): DataFrame = {
     import graft.plans.Plans.CheckpointOps
-    val st = prepare(spark, blocks, vertices)
+    val st = prepareRows(spark, edges, vertices, numBlocks)
     val out = toRanksDf(spark, st, damping, iterate(st, damping, iters),
       vertices).ckpt()
     st.unpersistAll()

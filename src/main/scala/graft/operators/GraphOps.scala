@@ -179,7 +179,8 @@ object GraphOps {
   def edgeBalancedSym(edges: DataFrame, numBlocks: Int): DataFrame = {
     val sym = symmetrize(edges)
     val deg = degrees(edges).select(col("vid"), col("deg"))
-    val total = deg.agg(sum(col("deg"))).head().getLong(0)
+    // coalesce: sum over an edgeless graph's empty degree table is NULL
+    val total = deg.agg(coalesce(sum(col("deg")), lit(0L))).head().getLong(0)
     val quota = math.max(1L, (total + numBlocks - 1) / numBlocks)
     val offs = cumDegByVid(deg)
       .select(col("vid").as("src"), (col("cum") - col("deg")).as("off"))

@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Csr, GraphOps, PageRank}
+import graft.operators.{CsrDirect, PageRank}
 
 /** PageRank vs the dense in-JVM power-iteration oracle — the north-rule bar
-  * is allclose 1e-6 per vertex (BASELINE.json).
+  * is allclose 1e-6 per vertex (BASELINE.json). The fast engine (CsrDirect)
+  * must also agree with the DataFrame spec (PageRank.fixedIterations) to
+  * 1e-12.
   */
 class PageRankSpec extends SparkSpec {
 
@@ -54,92 +56,103 @@ class PageRankSpec extends SparkSpec {
     assert(res.iterations < 100, "should converge well before maxIter")
   }
 
-  test("CSR-kernel PageRank matches the dense oracle on both block layouts") {
-    val e = Fixtures.zipf(200)
-    val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-    val want = Oracles.pageRank(e, verts, 0.85, 8)
-    val bounds = GraphOps.edgeBalancedRanges(edgesDf(e), 4)
-    assertClose(collectRanks(
-      Csr.pageRank(spark, Csr.build(spark, edgesDf(e), bounds),
-        vertsDf(verts), 0.85, 8)), want)
-    // edge-granular layout splits hubs but must compute the same function
-    assertClose(collectRanks(
-      Csr.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
-        vertsDf(verts), 0.85, 8)), want)
-  }
-
-  test("block-exchange fast path (CsrFast) computes the same ranks") {
-    val e = Fixtures.zipf(200)
-    val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-    val want = Oracles.pageRank(e, verts, 0.85, 8)
-    val got = collectRanks(
-      graft.operators.CsrFast.pageRank(spark,
-        Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8,
-        numParts = 3))
-    assertClose(got, want)
-    // bit-exact agreement with the DataFrame CSR path (same kernel, same
-    // merge order)
-    val df = collectRanks(
-      Csr.pageRank(spark, Csr.buildBalanced(spark, edgesDf(e), 4),
-        vertsDf(verts), 0.85, 8))
-    assert(got.keySet == df.keySet)
-    got.foreach { case (v, r) =>
-      assert(math.abs(r - df(v)) <= 1e-12, s"vid $v: fast $r vs df ${df(v)}")
+  /** CsrDirect end to end (prepareRows → iterate → toRanksDf) against the
+    * dense oracle (the 1e-6 bar) and the DataFrame spec (1e-12), on one
+    * block (no vertex split) and four (hubs split across blocks).
+    */
+  private def assertDirectMatches(name: String, e: Oracles.Edges,
+                                  verts: Seq[Long], iters: Int = 8): Unit = {
+    val want = Oracles.pageRank(e, verts, 0.85, iters)
+    val spec = collectRanks(
+      PageRank.fixedIterations(edgesDf(e), vertsDf(verts), 0.85, iters))
+    for (numBlocks <- Seq(1, 4)) {
+      val got = collectRanks(CsrDirect.pageRank(spark, edgesDf(e),
+        vertsDf(verts), numBlocks, 0.85, iters))
+      withClue(s"$name, $numBlocks block(s), vs dense oracle: ")(
+        assertClose(got, want))
+      withClue(s"$name, $numBlocks block(s), vs PageRank spec: ")(
+        assertClose(got, spec, 1e-12))
     }
   }
 
-  test("single-exchange path (CsrDirect) computes the same ranks") {
-    for ((name, e) <- cases) {
-      val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
-      val want = Oracles.pageRank(e, verts, 0.85, 8)
-      val got = collectRanks(
-        graft.operators.CsrDirect.pageRank(spark,
-          Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8))
-      assertClose(got, want)
-      // bit-exact agreement with CsrFast (same kernel arithmetic, both merge
-      // contributions in producer-block order)
-      val fast = collectRanks(
-        graft.operators.CsrFast.pageRank(spark,
-          Csr.buildBalanced(spark, edgesDf(e), 4), vertsDf(verts), 0.85, 8,
-          numParts = 3))
-      assert(got.keySet == fast.keySet, s"$name vertex sets differ")
-      got.foreach { case (v, r) =>
-        assert(math.abs(r - fast(v)) <= 1e-12,
-          s"$name vid $v: direct $r vs fast ${fast(v)}")
-      }
-      // the large-graph row-assembly path (prepareRows — no intermediate
-      // Csr.Block) must produce bit-identical state, hence identical ranks
-      val st = graft.operators.CsrDirect.prepareRows(spark, edgesDf(e),
-        vertsDf(verts), numBlocks = 4)
-      val rows = collectRanks(
-        graft.operators.CsrDirect.toRanksDf(spark, st, 0.85,
-          graft.operators.CsrDirect.iterate(st, 0.85, 8), vertsDf(verts)))
+  test("CSR-kernel PageRank matches the dense oracle on both block layouts") {
+    val e = Fixtures.zipf(200)
+    val verts = Fixtures.vertsOf(e) :+ 9999L // incl. an isolated vertex
+    // the two layouts differ: one block holds every vertex once, four
+    // blocks split the hubs (a vertex in several blocks)
+    for ((numBlocks, split) <- Seq(1 -> false, 4 -> true)) {
+      val st = CsrDirect.prepareRows(spark, edgesDf(e), vertsDf(verts), numBlocks)
+      val slots = st.blockStates.map(_.pre.vids.length.toLong).sum().toLong
       st.unpersistAll()
-      assert(rows.keySet == got.keySet, s"$name prepareRows vertex sets differ")
-      rows.foreach { case (v, r) =>
-        assert(math.abs(r - got(v)) <= 1e-12,
-          s"$name vid $v: prepareRows $r vs prepare ${got(v)}")
-      }
+      assert((slots > Fixtures.vertsOf(e).size) == split,
+        s"$numBlocks block(s): $slots vertex slots")
+    }
+    assertDirectMatches("zipf200", e, verts)
+  }
+
+  test("single-exchange path (CsrDirect) computes the same ranks") {
+    for ((name, e) <- cases)
+      assertDirectMatches(name, e, Fixtures.vertsOf(e) :+ 9999L)
+  }
+
+  test("CsrDirect matches the dense oracle and the spec on random graphs") {
+    import org.scalacheck.{Gen, Prop, Test}
+    type Graph = (Oracles.Edges, Seq[Long])
+    def weighted(r: scala.util.Random, pairs: Seq[(Long, Long)]) =
+      pairs.map { case (u, v) => (u, v, 1L + r.nextInt(5)) }
+    val erdosRenyi: Gen[Graph] = for {
+      n <- Gen.choose(2, 40); p <- Gen.choose(0.05, 0.4); seed <- Gen.long
+    } yield {
+      val r = new scala.util.Random(seed)
+      val pairs = for (u <- 0L until n; v <- u + 1 until n
+                       if r.nextDouble() < p) yield (u, v)
+      (weighted(r, pairs), 0L until n) // unconnected vertices stay in
+    }
+    val zipfHub: Gen[Graph] = for {
+      n <- Gen.choose(20, 200); seed <- Gen.long
+    } yield { val e = Fixtures.zipf(n, seed); (e, Fixtures.vertsOf(e)) }
+    val isolated: Gen[Graph] = for {
+      g <- erdosRenyi; k <- Gen.choose(1, 5)
+    } yield (g._1, g._2 ++ (1000L until 1000L + k))
+    val singleEdge: Gen[Graph] = for {
+      u <- Gen.choose(0L, 50L); d <- Gen.choose(1L, 50L); w <- Gen.choose(1L, 9L)
+    } yield (Seq((u, u + d, w)), Seq(u, u + d))
+    val selfLoop: Gen[Graph] = for {
+      g <- erdosRenyi; v <- Gen.oneOf(g._2); w <- Gen.choose(1L, 9L)
+    } yield (g._1 :+ ((v, v, w)), g._2)
+    val edgeless: Gen[Graph] =
+      Gen.choose(1, 10).map(n => (Nil, (0L until n.toLong)))
+    val families = Seq("Erdős–Rényi" -> erdosRenyi, "Zipf hub" -> zipfHub,
+      "isolated vertices" -> isolated, "single edge" -> singleEdge,
+      "self-loop" -> selfLoop, "edgeless" -> edgeless)
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(2).withInitialSeed(42L)
+    for ((name, gen) <- families) {
+      // no shrinking: every shrink step would rerun the Spark pipelines
+      val res = Test.check(params, Prop.forAllNoShrink(gen) {
+        case (e, verts) => assertDirectMatches(name, e, verts); true
+      })
+      assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
     }
   }
 
   test("CsrDirect state save/load round-trip is bit-exact") {
     val e = Fixtures.zipf(300)
     val verts = Fixtures.vertsOf(e)
-    val st = graft.operators.CsrDirect.prepareRows(spark, edgesDf(e),
+    val st = CsrDirect.prepareRows(spark, edgesDf(e),
       vertsDf(verts), numBlocks = 4)
     val want = collectRanks(
-      graft.operators.CsrDirect.toRanksDf(spark, st, 0.85,
-        graft.operators.CsrDirect.iterate(st, 0.85, 6), vertsDf(verts)))
+      CsrDirect.toRanksDf(spark, st, 0.85,
+        CsrDirect.iterate(st, 0.85, 6), vertsDf(verts)))
     val dir = java.nio.file.Files.createTempDirectory("graft-dstate")
       .toString
-    graft.operators.CsrDirect.saveState(st, dir)
+    CsrDirect.saveState(st, dir)
     st.unpersistAll()
-    val st2 = graft.operators.CsrDirect.loadState(spark, dir)
+    val st2 = CsrDirect.loadState(spark, dir)
     assert(st2.n == st.n && st2.nBlocks == st.nBlocks)
     val got = collectRanks(
-      graft.operators.CsrDirect.toRanksDf(spark, st2, 0.85,
-        graft.operators.CsrDirect.iterate(st2, 0.85, 6), vertsDf(verts)))
+      CsrDirect.toRanksDf(spark, st2, 0.85,
+        CsrDirect.iterate(st2, 0.85, 6), vertsDf(verts)))
     st2.unpersistAll()
     assert(got == want, "loaded state must reproduce ranks bit-exactly")
   }

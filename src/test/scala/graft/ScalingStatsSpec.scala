@@ -124,4 +124,30 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(j.contains("\"fork_trials_lo\":[1,1,1]"), j)
     assert(j.contains("\"fork_trials_hi\":[1]"), j)
   }
+
+  test("conv_gap is null, not NaN, when a level's best two medians are 0") {
+    // 0/0 - 1 = NaN: bare NaN is invalid JSON for the parent's parse
+    val pr = PairResult(
+      loForks = Seq(fork(4, 3, Seq(0, 0, 0), 0.0), fork(4, 3, Seq(0, 0, 0), 0.0)),
+      hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3),
+        fork(16, 3, Seq(100, 100, 100), 0.3)),
+      cpusLo = 4, cpusHi = 16)
+    assert(pr.gapLo.isNaN)
+    val j = Scaling.json(pr)
+    assert(j.contains("\"conv_gap_lo\":null"), j)
+    assert(j.contains("\"conv_gap_hi\":0.0000"), j)
+  }
+
+  test("resumeKeyMatches keeps a matching key file, deletes a stale one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-resume-key")
+    val path = dir.resolve("prep-key.txt")
+    assert(!Scaling.resumeKeyMatches(path, "nConv=10 turns=600"))
+    java.nio.file.Files.writeString(path, "nConv=10 turns=600\n")
+    assert(Scaling.resumeKeyMatches(path, "nConv=10 turns=600"))
+    assert(java.nio.file.Files.exists(path), "a matching key stays")
+    assert(!Scaling.resumeKeyMatches(path, "nConv=10 turns=300"))
+    assert(!java.nio.file.Files.exists(path),
+      "a stale key must be gone before the rebuild overwrites the tables")
+    java.nio.file.Files.delete(dir)
+  }
 }
