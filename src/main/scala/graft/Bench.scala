@@ -1,36 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.plans.Json
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
   *
-  * Sections:
+  * The line is written through [[plans.Json]]. Sections:
   *   - `queries`: wall seconds per SparkEntry query on SPARK_GRAFT_SF_DIR
-  *     at local[SPARK_GRAFT_CPUS]. Each query is forced with a value-
-  *     consuming aggregate (bit_xor of a row hash over ALL columns) — a
-  *     bare count() lets Catalyst prune computed columns and understate
-  *     the work (NOTES.md);
+  *     at local[SPARK_GRAFT_CPUS] (default: every core of the host). Each
+  *     query is forced with a value-consuming aggregate (bit_xor of a row
+  *     hash over ALL columns) — a bare count() lets Catalyst prune computed
+  *     columns and understate the work (NOTES.md). SPARK_GRAFT_ONLY=q_a,q_b
+  *     times just those queries;
   *   - `scaling`: the north-rule two-parallelism evidence — the identical
   *     CsrDirect PageRank job over a deterministically synthesized
   *     transcript graph at local[N] vs local[4N] (N=4,
   *     [[Scaling.pairForked]]), each leg in a FRESH JVM (a second
   *     SparkSession in one JVM measured up to 4x slower), with throughput
-  *     at both and the efficiency (target >= 0.8). Skippable via
-  *     SPARK_GRAFT_SKIP_SCALING=1 for quick iteration.
+  *     at both and the efficiency (target >= 0.8). Its size is
+  *     SPARK_GRAFT_SCALE_CONVS conversations × SPARK_GRAFT_SCALE_ITERS
+  *     iterations per lo-leg trial; `{"error":…}` when the pair failed.
+  *     Skippable via SPARK_GRAFT_SKIP_SCALING=1 for quick iteration.
   */
 object Bench {
-
-  /** JSON string escape for embedding error messages. */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
 
   def main(args: Array[String]): Unit = {
     // scaling's fork hunt must never push the whole bench past the
@@ -42,15 +34,7 @@ object Bench {
     sys.props("graft.scale.deadline.ms") =
       (System.currentTimeMillis() + 3250L * 1000).toString
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.locality.wait", "0ms")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Local.session(Local.cpus, Local.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Untimed one-time JVM warm-up: without it, whichever query sorts
     // first absorbs ~8-10 s of session cost that belongs to NO query —
@@ -69,7 +53,6 @@ object Bench {
       System.err.println(
         f"[bench] warmup ${(System.nanoTime() - t0) / 1e9}%.3f s (untimed)")
     }
-    // dev filter: SPARK_GRAFT_ONLY=q_a,q_b times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -92,33 +75,19 @@ object Bench {
       System.err.flush()
       name -> sec
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     spark.stop()
 
     val scaling =
-      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")) "null"
-      else {
-        // 6M convs × 600 turns ≈ 522M canonical / ~1.04 × 10^9 DIRECTED
-        // edges — the north rule's literal "10^9 edges" scale. Bigger is
-        // also better for the efficiency bar: per-iteration parallel work
-        // W/c must dominate the ~25-30 ms/iter stage fixed cost, and each
-        // doubling (130M → 261M edges moved the protocol from 0.798 to
-        // ~0.85-0.9) halves the hi leg's fixed-cost share while the lo leg
-        // scales cleanly; density (not vertex count) raises W per heap
-        // byte, keeping the persisted CSR state inside the 30g child heap
-        val nConv = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "6000000").toLong
-        val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
-        try {
-          Scaling.json(Scaling.pairForked(nConv = nConv, iters = iters))
-        } catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          s"""{"error":"${jsonEscape(msg)}"}"""
-        }
+      if (sys.env.get("SPARK_GRAFT_SKIP_SCALING").contains("1")) null
+      else try Json.Obj(Scaling.fields(Scaling.pairForked()))
+      catch { case e: Throwable =>
+        Json.Obj(Seq("error" -> Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
 
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","scaling":$scaling}""")
+    println(Json.render("metric" -> "total", "value" -> Json.fixed(total, 3),
+      "unit" -> "sec",
+      "queries" -> Json.Obj(results.map { case (k, v) => k -> Json.fixed(v, 3) }),
+      "sf" -> sfDir, "scaling" -> scaling))
   }
 }

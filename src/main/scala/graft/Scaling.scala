@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{CsrDirect, EdgeDeriver}
+import graft.plans.Json
 import graft.sources.Transcripts
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
@@ -19,7 +20,6 @@ object Scaling {
   case class RunResult(cpus: Int, vertices: Long, edges: Long, iters: Int,
                        seconds: Double,
                        trialSecs: Seq[Double] = Nil,
-                       iterMs: Seq[Double] = Nil,
                        trialIterMeds: Seq[Double] = Nil) {
     def itersPerSec: Double = iters / seconds
     /** edge-traversals/sec: 2|E| contribution flows per iteration */
@@ -30,22 +30,12 @@ object Scaling {
       * cleanest trial — pooling all samples first buried a clean trial
       * under two noisy ones (observed: per-trial medians 1075/617/925 ms
       * pooled to 868 where the machine's quiet capacity was ~620).
-      * Prefers the explicit per-trial medians (computed in the child, so
-      * wall-capped truncated trials median over exactly their own
-      * samples); falls back to regrouping the flat samples by nominal
-      * trial length for older inputs. NaN if samples are unavailable.
+      * The per-trial medians are computed in the child, so wall-capped
+      * truncated trials median over exactly their own samples. NaN if no
+      * trial drained samples.
       */
-    def iterMedianMs: Double = {
-      // NaN-guard both layers: a trial whose listener drain came back empty
-      // contributes median(Nil)=NaN, and an all-NaN trialIterMeds must fall
-      // through to regrouping the flat samples, not poison the min
-      val finiteMeds = trialIterMeds.filterNot(_.isNaN)
-      if (finiteMeds.nonEmpty) finiteMeds.min
-      else if (iterMs.isEmpty) Double.NaN
-      else iterMs.grouped(math.max(1, iters))
-        .map(g => Scaling.median(g)).filterNot(_.isNaN)
-        .minOption.getOrElse(Double.NaN)
-    }
+    def iterMedianMs: Double =
+      trialIterMeds.filterNot(_.isNaN).minOption.getOrElse(Double.NaN)
   }
 
   private[graft] def median(xs: Seq[Double]): Double =
@@ -71,8 +61,7 @@ object Scaling {
   // edges): fewer blocks shrink Σ|per-block dst dictionary| — the bytes
   // exchanged AND the accumulator footprint per iteration — and the
   // 16-thread leg is the bandwidth-bound one, so it gains the most
-  private val NumBlocks =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_BLOCKS", "16").toInt
+  private val NumBlocks = 16
 
   // longer conversations → denser link graph (default ≈ avg degree 170 —
   // denser than the reference's OGB regime on purpose: density sets the
@@ -81,16 +70,24 @@ object Scaling {
   // persisted CSR state still fits the default 20g heap; at avg degree ~7
   // the O(V) narrow-row plumbing dominates (a memory-bandwidth cost that
   // cannot scale on one box).
-  private val MaxTurns =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_TURNS", "600").toInt
+  private val MaxTurns = 600
+
+  // the measurement protocol ([[run]], [[pairForked]]): wall cap of one
+  // trial (s), alternated lo/hi fork pairs, single-leg redraws, best-two
+  // fork-median convergence tolerance, and the lo leg's threads (the hi
+  // leg runs 4x); then k of the whole-V-cycle partition mode
+  private val TrialCapSec = 100.0
+  private val Forks = 3
+  private val MaxExtra = 6
+  private val ConvTol = 0.05
+  private val CpusLo = 4
+  private val PartK = 8
 
   private def session(cpus: Int): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // the SQL shuffles (graph derivation, block assembly) use the block
+    // count: the same layout at every parallelism level
+    val s = Local.session(cpus, NumBlocks)
       .appName(s"graft-scaling-$cpus")
-      // the SQL shuffles (graph derivation, block assembly) use the
-      // block count: the same layout at every parallelism level
-      .config("spark.sql.shuffle.partitions", NumBlocks.toString)
       // the measured loop is the RDD kernel — Kryo for its tuple shuffles
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // force the single-file sort shuffle writer: the default bypass-merge
@@ -118,34 +115,8 @@ object Scaling {
       // AQE stays ON: its runtime broadcast of the per-block rank arrays is
       // what keeps the CSR blocks from being re-shuffled every iteration
       // (measured 6x slower without it)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      // local mode: every task is process-local — never pay the locality
-      // scheduler's wait-and-see delay on the per-iteration stages
-      .config("spark.locality.wait", "0ms")
-      .config("spark.ui.enabled", "false")
-    val s = builder.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // dev-only stage profile: wall vs summed task run/cpu time per stage —
-    // reveals which per-iteration stage stops scaling with threads
-    if (sys.env.get("SPARK_GRAFT_SCALE_PROFILE").contains("1")) {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-          val si = e.stageInfo
-          val wall = (si.completionTime.getOrElse(0L) -
-            si.submissionTime.getOrElse(0L)) / 1e3
-          val m = si.taskMetrics
-          System.err.println(
-            f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
-            f"wall=$wall%6.2fs run=${m.executorRunTime / 1e3}%7.2fs " +
-            f"cpu=${m.executorCpuTime / 1e9}%7.2fs " +
-            f"sRead=${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1fMB " +
-            f"sWrite=${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1fMB " +
-            si.name.take(60))
-        }
-      })
-    }
     s
   }
 
@@ -210,13 +181,7 @@ object Scaling {
       System.err.println(s"[scaling] prep reused ($prepKey)")
       return
     }
-    // cores override for the prep session: the per-block CSR state build
-    // runs one multi-GB assembly task per block, so at 10^9-directed-edge
-    // scale full parallelism can put 16 concurrent multi-GB tasks on the
-    // heap at once — fewer cores trade untimed prep wall for peak memory
-    val prepCpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_PREP_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = session(prepCpus)
+    val spark = session(Runtime.getRuntime.availableProcessors())
     try {
       // stage-level resume: the synth+derive of the edge/vid tables is the
       // long half of prep (~25 min at 6M convs) and depends only on the
@@ -337,19 +302,25 @@ object Scaling {
       // can set iters=160+, where a full-length warmup would burn ~45 s of
       // deadline per leg for nothing
       val wu = if (warmupIters > 0) warmupIters else math.min(iters, 40)
+      // `total` iterations in chunks of at most 20, stopped at a chunk
+      // boundary once TrialCapSec has passed: (iterations run, chunks)
+      def capped(total: Int): (Int, Int) = {
+        val t0 = System.nanoTime()
+        var done = 0
+        var nChunks = 0
+        while (done < total && (done == 0 ||
+            (System.nanoTime() - t0) / 1e9 < TrialCapSec)) {
+          val n = math.min(20, total - done)
+          force(iterate(n))
+          done += n
+          nChunks += 1
+        }
+        (done, nChunks)
+      }
       // warmup is wall-capped like the trials (in sustained noise 40
       // uncapped iterations cost ~2 min of deadline; C2 is past its knee
       // by ~15 invocations, so a capped warmup still JITs the kernel)
-      locally {
-        val t0 = System.nanoTime()
-        var done = 0
-        while (done < wu && (done == 0 || (System.nanoTime() - t0) / 1e9 <
-            sys.env.getOrElse("SPARK_GRAFT_SCALE_TRIAL_CAP", "100").toDouble)) {
-          val n = math.min(20, wu - done)
-          force(iterate(n))
-          done += n
-        }
-      }
+      capped(wu)
       // drain the warmup's ~3 GB of message-array garbage BEFORE trial 1:
       // without this, ZGC's concurrent cycle for it overlapped the first
       // trial (trial 1 measured 3-6x slow in every fork, even post-warmup)
@@ -378,22 +349,10 @@ object Scaling {
       // ever truncate SLOW trials: 20 quiet iterations finish far inside
       // it, so a truncated trial is noisy by construction and its
       // (correctly computed, own-samples) median never wins the min
-      val trialCapSec =
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_TRIAL_CAP", "100").toDouble
-      val chunk = math.max(1, math.min(iters, 20))
-      val iterSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
       val trialMeds = scala.collection.mutable.ArrayBuffer.empty[Double]
       val trialSecs = (1 to trials).map { t =>
         val t0 = System.nanoTime()
-        var done = 0
-        var nChunks = 0
-        while (done < iters && (done == 0 ||
-            (System.nanoTime() - t0) / 1e9 < trialCapSec)) {
-          val n = math.min(chunk, iters - done)
-          force(iterate(n))
-          done += n
-          nChunks += 1
-        }
+        val (done, nChunks) = capped(iters)
         val dt = (System.nanoTime() - t0) / 1e9
         // expected listener events: one map stage per iteration PLUS one
         // result stage per chunk (each force() ends in its own result
@@ -402,14 +361,12 @@ object Scaling {
         // leaking its map samples (plus an inter-trial-gap outlier) into
         // the next trial's median
         val perIter = drainIterMs(done + nChunks)
-        iterSamples ++= perIter
-        // median(Nil) is NaN — appending it would serialize invalid bare
-        // NaN into the child's JSON line; skip empty drains instead
+        // median(Nil) is NaN: an empty drain is no trial median at all
         val med = median(perIter)
         if (!med.isNaN) trialMeds += med
-        val capped = if (done < iters) s" CAPPED at $done/$iters iters" else ""
+        val cap = if (done < iters) s" CAPPED at $done/$iters iters" else ""
         System.err.println(f"[scaling] cpus=$cpus trial=$t ${dt}%.2fs " +
-          f"iterMed=${median(perIter)}%.0fms (${perIter.size} samples)$capped")
+          f"iterMed=$med%.0fms (${perIter.size} samples)$cap")
         // reap the trial's shuffle files from the tmpfs dir before the
         // next trial (the timing above has already been taken)
         System.gc(); Thread.sleep(1000)
@@ -419,7 +376,7 @@ object Scaling {
       }
       st.unpersistAll()
       RunResult(cpus, st.n, nE, iters, trialSecs.min, trialSecs,
-        iterSamples.toSeq, trialMeds.toSeq)
+        trialMeds.toSeq)
     } finally spark.stop()
   }
 
@@ -438,9 +395,9 @@ object Scaling {
   /** One measured run in a FRESH JVM (the clean-measurement path): spawn
     * `java -cp <this classpath> graft.Scaling` with
     * SPARK_GRAFT_SCALE_CPUS set, inherit this JVM's flags (add-opens, heap),
-    * parse the single-run JSON line. Each parallelism level gets its own
-    * heap/JIT — a second SparkSession in one JVM measured up to 4x slower
-    * (NOTES.md).
+    * return the child's stdout, whose last line is its JSON result. Each
+    * parallelism level gets its own heap/JIT — a second SparkSession in one
+    * JVM measured up to 4x slower (NOTES.md).
     */
   private def fork(env: Map[String, String],
                    gcArgs: Option[Seq[String]] = None): String = {
@@ -482,44 +439,33 @@ object Scaling {
     val pb = new ProcessBuilder(cmd: _*)
     env.foreach { case (k, v) => pb.environment().put(k, v) }
     pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+    // stdout goes to a file read once the child has exited: a synchronous
+    // pipe read would park the parent on a HUNG child (no in-child
+    // deadline) past the bench timeout — exactly the round-2 rc=124
+    // failure shape, just one level down
+    val outFile = java.nio.file.Files.createTempFile("graft-scaling-fork", ".out")
+    pb.redirectOutput(outFile.toFile)
     val p = pb.start()
-    // read the child's stdout on a side thread: a synchronous mkString
-    // blocks until pipe EOF, so a HUNG child (no in-child deadline) would
-    // park the parent past the driver's timeout — exactly the round-2
-    // rc=124 failure shape, just one level down
-    val outBuf = new StringBuilder
-    val reader = new Thread(() => {
-      val src = scala.io.Source.fromInputStream(p.getInputStream)
-      try src.getLines().foreach { l =>
-        outBuf.synchronized { outBuf ++= l; outBuf += '\n' }
-      } finally src.close()
-    }, "scaling-fork-stdout")
-    reader.setDaemon(true)
-    reader.start()
-    // deadline-aware wait: when Bench set graft.scale.deadline.ms, give
-    // the child until deadline + 120 s grace, then kill it — a wedged
-    // fork must cost its own wall, never the whole bench JSON
-    val finished = sys.props.get("graft.scale.deadline.ms").map(_.toLong) match {
-      case Some(d) =>
-        val waitMs = math.max(10000L, d + 120000L - System.currentTimeMillis())
-        p.waitFor(waitMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-      case None => p.waitFor(); true
-    }
-    if (!finished) {
-      p.destroyForcibly()
-      p.waitFor()
-      sys.error(s"forked scaling child $env overran the bench deadline — killed")
-    }
-    // the child has exited (or was force-killed), so pipe EOF is
-    // guaranteed — join unbounded: a bounded join could hand back a
-    // TRUNCATED json line from a healthy child when the reader thread is
-    // starved under a 32-thread leg, turning a good draw into a fake
-    // failure
-    reader.join()
-    val out = outBuf.synchronized(outBuf.toString)
-    val rc = p.exitValue()
-    require(rc == 0, s"forked scaling child $env exited $rc: $out")
-    out
+    try {
+      // deadline-aware wait: when Bench set graft.scale.deadline.ms, give
+      // the child until deadline + 120 s grace, then kill it — a wedged
+      // fork must cost its own wall, never the whole bench JSON
+      val finished = sys.props.get("graft.scale.deadline.ms").map(_.toLong) match {
+        case Some(d) =>
+          val waitMs = math.max(10000L, d + 120000L - System.currentTimeMillis())
+          p.waitFor(waitMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+        case None => p.waitFor(); true
+      }
+      if (!finished) {
+        p.destroyForcibly()
+        p.waitFor()
+        sys.error(s"forked scaling child $env overran the bench deadline — killed")
+      }
+      val out = java.nio.file.Files.readString(outFile)
+      val rc = p.exitValue()
+      require(rc == 0, s"forked scaling child $env exited $rc: $out")
+      out
+    } finally java.nio.file.Files.deleteIfExists(outFile)
   }
 
   def runForked(cpus: Int, nConv: Long, iters: Int,
@@ -532,16 +478,30 @@ object Scaling {
       "SPARK_GRAFT_SCALE_FORK_IDX" -> forkIdx.toString) ++
       trials.map("SPARK_GRAFT_SCALE_TRIALS" -> _.toString) ++
       edgesDir.map("SPARK_GRAFT_SCALE_EDGES_DIR" -> _))
-    def field(k: String): String =
-      s""""$k":([0-9.]+)""".r.findFirstMatchIn(out)
-        .getOrElse(sys.error(s"no $k in forked output: $out")).group(1)
-    def arr(k: String): Seq[Double] =
-      s""""$k":\\[([^\\]]*)\\]""".r.findFirstMatchIn(out)
-        .map(_.group(1).split(",").filter(_.nonEmpty).map(_.toDouble).toSeq)
-        .getOrElse(Nil)
-    RunResult(cpus, field("vertices").toLong, field("edges").toLong,
-      field("pr_iters").toInt, field("seconds").toDouble,
-      arr("trial_secs"), arr("iter_ms"), arr("trial_iter_meds"))
+    parseRun(out)
+  }
+
+  /** A single-run child's result line, read back by [[parseRun]]. */
+  private[graft] def runJson(r: RunResult): String =
+    Json.render("cpus" -> r.cpus, "vertices" -> r.vertices,
+      "edges" -> r.edges, "pr_iters" -> r.iters,
+      "seconds" -> Json.fixed(r.seconds, 2),
+      "iters_per_sec" -> Json.fixed(r.itersPerSec, 3),
+      "trial_secs" -> r.trialSecs.map(Json.fixed(_, 2)),
+      "trial_iter_meds" -> r.trialIterMeds.map(Json.fixed(_, 1)))
+
+  /** The [[runJson]] result in the last non-blank line of a child's stdout. */
+  private[graft] def parseRun(out: String): RunResult = {
+    import scala.jdk.CollectionConverters._
+    val j = Json.parse(out.linesIterator.filter(_.trim.nonEmpty).toSeq.lastOption
+      .getOrElse(sys.error(s"no result line in forked output: $out")))
+    def num(k: String) = Option(j.get(k)).filter(_.isNumber)
+      .getOrElse(sys.error(s"no $k in forked output: $out"))
+    def arr(k: String) = j.get(k).elements().asScala
+      .map(n => if (n.isNull) Double.NaN else n.asDouble).toSeq
+    RunResult(num("cpus").asInt, num("vertices").asLong, num("edges").asLong,
+      num("pr_iters").asInt, num("seconds").asDouble,
+      arr("trial_secs"), arr("trial_iter_meds"))
   }
 
   /** Aggregated two-level result: every fork retained for auditability.
@@ -602,8 +562,8 @@ object Scaling {
     * child (the low-thread legs re-deriving 10^8 turn rows was pure
     * untimed wall-clock). Headline pair is N=4 → 4N=16 ("N and 4N cores").
     */
-  def pairForked(cpusLo: Int = 4, cpusHi: Int = 16, nConv: Long,
-                 iters: Int): PairResult = {
+  def pairForked(cpusLo: Int = CpusLo, cpusHi: Int = 4 * CpusLo,
+                 nConv: Long = envConvs, iters: Int = envIters): PairResult = {
     // the prep dir is KEPT across bench runs (prep-key idempotence in
     // prepEdges): at the default 6M convs the synth+derive+CSR build is
     // ~35-40 min of wall the driver's timed bench window cannot afford to
@@ -641,15 +601,11 @@ object Scaling {
       // emitted unconverged at gaps ~13%). Base pairs sample both levels
       // blindly; extras target exactly the unconverged level — at this
       // leg cost the third pair's wall buys more convergence as extras.
-      val forks = sys.env.getOrElse("SPARK_GRAFT_SCALE_FORKS", "3").toInt
-      // if the robust statistic still lands outside the credible band
-      // after the base forks (e.g. a noisy window covered most of the
-      // run), spend up to `maxExtra` more SINGLE-LEG forks hunting a
-      // quieter window for the implicated level — min-of-fork-medians only
-      // ever moves toward machine capacity, and every fork is emitted in
-      // the JSON so the search is auditable
-      val maxExtra = sys.env.getOrElse("SPARK_GRAFT_SCALE_EXTRA", "6").toInt
-      val target = sys.env.getOrElse("SPARK_GRAFT_SCALE_TARGET", "0.82").toDouble
+      // If a level has not converged after the base forks (e.g. a noisy
+      // window covered most of the run), spend up to MaxExtra more
+      // SINGLE-LEG forks hunting a quieter window for it — min-of-fork-
+      // medians only ever moves toward machine capacity, and every fork is
+      // emitted in the JSON so the search is auditable
       // absolute epoch-millis deadline (set by Bench from the driver's
       // timeout): never let the extra-fork hunt run the bench past it
       val deadline = sys.props.get("graft.scale.deadline.ms").map(_.toLong)
@@ -708,12 +664,12 @@ object Scaling {
       // level)
       runPair(1)
       var k = 1
-      while (k < forks && fits(maxLegSec(cpusLo) + maxLegSec(cpusHi))) {
+      while (k < Forks && fits(maxLegSec(cpusLo) + maxLegSec(cpusHi))) {
         k += 1
         runPair(k)
       }
-      if (k < forks)
-        System.err.println(s"[scaling] deadline: stopped after $k/$forks " +
+      if (k < Forks)
+        System.err.println(s"[scaling] deadline: stopped after $k/$Forks " +
           "base fork pairs — emitting with what we have")
       // CONVERGENCE stopping rule (replaces the round-4 stop-on-pass):
       // the old hunt redrew only while the headline sat outside the pass
@@ -721,17 +677,14 @@ object Scaling {
       // statistic, which monotonically favors the pass and biases the
       // reported efficiency upward. The redraw criterion is now purely
       // statistical and band-blind: a level is DONE when its two best
-      // fork medians agree within convTol (default 5%); extras go to
+      // fork medians agree within ConvTol (5%); extras go to
       // whichever level is not yet converged (no-data levels first),
       // and the hunt stops the moment BOTH levels converge — wherever
-      // the ratio then lands, in band or not. The target band survives
-      // only in diagnostics (logged per redraw).
+      // the ratio then lands, in band or not.
       // the forks so far; its gapLo/gapHi are the statistic the JSON emits
       def sofar = PairResult(loF, hiF, cpusLo, cpusHi)
       def effOpt: Option[Double] =
         if (loF.isEmpty || hiF.isEmpty) None else Some(sofar.eff)
-      val convTol =
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_CONV_TOL", "0.05").toDouble
       // redraw priority: a level with NO data, then the level further
       // from converging (its min-median is the less trustworthy one)
       def retryCpus: Int =
@@ -739,7 +692,7 @@ object Scaling {
         else if (hiF.isEmpty) cpusHi
         else if (sofar.gapLo > sofar.gapHi) cpusLo else cpusHi
       def allConverged: Boolean = loF.nonEmpty && hiF.nonEmpty &&
-        sofar.gapLo <= convTol && sofar.gapHi <= convTol
+        sofar.gapLo <= ConvTol && sofar.gapHi <= ConvTol
       // a short 1-trial redraw costs roughly prep + warmup + one trial —
       // ~60% of a full 3-trial leg. For a MIN statistic more independent
       // draws beat more trials per draw, so when the deadline can no
@@ -747,7 +700,7 @@ object Scaling {
       def shortLegCost(c: Int): Double = maxLegSec(c) * 0.6
       var extra = 0
       var budgetLeft = true
-      while (extra < maxExtra && !allConverged && budgetLeft) {
+      while (extra < MaxExtra && !allConverged && budgetLeft) {
         val c = retryCpus
         val full = fits(maxLegSec(c))
         if (!full && !fits(shortLegCost(c))) budgetLeft = false
@@ -757,7 +710,7 @@ object Scaling {
           System.err.println(
             f"[scaling] eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
             f"gap(lo)=${sofar.gapLo}%.3f gap(hi)=${sofar.gapHi}%.3f " +
-            f"(tol $convTol%.2f, band [$target%.2f, 1.05]) — extra cpus=$c " +
+            f"(tol $ConvTol%.2f) — extra cpus=$c " +
             s"${if (full) "leg" else "SHORT (1-trial) leg"}, fork $k")
           runLeg(k, c, trials = if (full) None else Some(1))
         }
@@ -766,7 +719,7 @@ object Scaling {
         System.err.println(f"[scaling] emitting UNCONVERGED " +
           f"eff=${effOpt.getOrElse(Double.NaN)}%.3f " +
           f"gap(lo)=${sofar.gapLo}%.3f gap(hi)=${sofar.gapHi}%.3f " +
-          s"(budget: extra=$extra/$maxExtra, " +
+          s"(budget: extra=$extra/$MaxExtra, " +
           s"fits=${fits(shortLegCost(retryCpus))})")
       require(loF.nonEmpty && hiF.nonEmpty, "every scaling fork at " +
         s"${if (loF.isEmpty) cpusLo else cpusHi} cpus failed — no data to emit")
@@ -774,10 +727,8 @@ object Scaling {
     }
   }
 
-  private def jsonArr(xs: Seq[Double], fmt: String = "%.2f"): String =
-    xs.map(x => fmt.format(x)).mkString("[", ",", "]")
-
-  def json(pr: PairResult): String = {
+  /** The pair's JSON fields, in emission order (non-finite values are null). */
+  def fields(pr: PairResult): Seq[(String, Any)] = {
     val lo = pr.lo; val hi = pr.hi
     // throughput numbers (iters/sec, TEPS) derive from the ROBUST per-
     // iteration estimate so they are consistent with the headline
@@ -786,42 +737,57 @@ object Scaling {
     // count so min-over-trials compares like walls)
     val ipsLo = if (pr.medLoMs.isNaN) lo.itersPerSec else 1000.0 / pr.medLoMs
     val ipsHi = if (pr.medHiMs.isNaN) hi.itersPerSec else 1000.0 / pr.medHiMs
-    // null when the gap is undefined: <2 finite fork medians (+inf) or
-    // two zero medians (NaN) — neither is valid JSON as a number
-    def gapJson(g: Double) = if (g.isFinite) f"$g%.4f" else "null"
-    s"""{"cpus_lo":${pr.cpusLo},"cpus_hi":${pr.cpusHi},""" +
-    s""""vertices":${lo.vertices},"edges":${lo.edges},""" +
-    s""""pr_iters":${lo.iters},"pr_iters_hi":${hi.iters},""" +
-    s""""sec_lo":${f"${lo.seconds}%.2f"},"sec_hi":${f"${hi.seconds}%.2f"},""" +
-    s""""iters_per_sec_lo":${f"$ipsLo%.3f"},""" +
-    s""""iters_per_sec_hi":${f"$ipsHi%.3f"},""" +
-    s""""teps_lo":${f"${2.0 * lo.edges * ipsLo}%.0f"},""" +
-    s""""teps_hi":${f"${2.0 * hi.edges * ipsHi}%.0f"},""" +
-    s""""iter_ms_med_lo":${f"${pr.medLoMs}%.1f"},""" +
-    s""""iter_ms_med_hi":${f"${pr.medHiMs}%.1f"},""" +
-    s""""fork_iter_med_lo":${jsonArr(pr.loForks.map(_.iterMedianMs), "%.1f")},""" +
-    s""""fork_iter_med_hi":${jsonArr(pr.hiForks.map(_.iterMedianMs), "%.1f")},""" +
-    s""""trials_lo":${jsonArr(pr.loForks.flatMap(_.trialSecs))},""" +
-    s""""trials_hi":${jsonArr(pr.hiForks.flatMap(_.trialSecs))},""" +
-    // trials actually run per fork: short (1-trial) deadline redraws are
-    // visible here instead of hiding behind the aggregate fork counts
-    s""""fork_trials_lo":${pr.loForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
-    s""""fork_trials_hi":${pr.hiForks.map(_.trialSecs.size).mkString("[", ",", "]")},""" +
-    s""""forks_lo":${pr.loForks.size},"forks_hi":${pr.hiForks.size},""" +
-    s""""conv_gap_lo":${gapJson(pr.gapLo)},"conv_gap_hi":${gapJson(pr.gapHi)},""" +
-    s""""wall_scaling_efficiency":${f"${pr.effWall}%.3f"},""" +
-    s""""protocol":"equal-wall trials (per-trial iters scaled by parallelism); median per-iteration stage time per fork, min of fork medians per level; redraws stop on best-two fork-median convergence (tol 5%), band-blind; wall = min trial normalized per iteration; headline capped at 1.0 (super-unit = lo-leg noise)",""" +
-    s""""scaling_efficiency_raw":${f"${pr.eff}%.3f"},""" +
-    s""""scaling_efficiency":${f"${pr.effCapped}%.3f"}}"""
+    Seq("cpus_lo" -> pr.cpusLo, "cpus_hi" -> pr.cpusHi,
+      "vertices" -> lo.vertices, "edges" -> lo.edges,
+      "pr_iters" -> lo.iters, "pr_iters_hi" -> hi.iters,
+      "sec_lo" -> Json.fixed(lo.seconds, 2), "sec_hi" -> Json.fixed(hi.seconds, 2),
+      "iters_per_sec_lo" -> Json.fixed(ipsLo, 3), "iters_per_sec_hi" -> Json.fixed(ipsHi, 3),
+      "teps_lo" -> Json.fixed(2.0 * lo.edges * ipsLo, 0),
+      "teps_hi" -> Json.fixed(2.0 * hi.edges * ipsHi, 0),
+      // null on the wall-ratio fallback (no per-iteration samples)
+      "iter_ms_med_lo" -> Json.fixed(pr.medLoMs, 1), "iter_ms_med_hi" -> Json.fixed(pr.medHiMs, 1),
+      "fork_iter_med_lo" -> pr.loForks.map(f => Json.fixed(f.iterMedianMs, 1)),
+      "fork_iter_med_hi" -> pr.hiForks.map(f => Json.fixed(f.iterMedianMs, 1)),
+      "trials_lo" -> pr.loForks.flatMap(_.trialSecs).map(Json.fixed(_, 2)),
+      "trials_hi" -> pr.hiForks.flatMap(_.trialSecs).map(Json.fixed(_, 2)),
+      // trials actually run per fork: short (1-trial) deadline redraws are
+      // visible here instead of hiding behind the aggregate fork counts
+      "fork_trials_lo" -> pr.loForks.map(_.trialSecs.size),
+      "fork_trials_hi" -> pr.hiForks.map(_.trialSecs.size),
+      "forks_lo" -> pr.loForks.size, "forks_hi" -> pr.hiForks.size,
+      // null when the gap is undefined: <2 finite fork medians (+inf) or
+      // two zero medians (NaN)
+      "conv_gap_lo" -> Json.fixed(pr.gapLo, 4), "conv_gap_hi" -> Json.fixed(pr.gapHi, 4),
+      "wall_scaling_efficiency" -> Json.fixed(pr.effWall, 3),
+      "protocol" -> ("equal-wall trials (per-trial iters scaled by parallelism); " +
+        "median per-iteration stage time per fork, min of fork medians per level; " +
+        "redraws stop on best-two fork-median convergence " +
+        s"(tol ${math.round(ConvTol * 100)}%), band-blind; wall = min trial " +
+        "normalized per iteration; headline capped at 1.0 (super-unit = lo-leg noise)"),
+      "scaling_efficiency_raw" -> Json.fixed(pr.eff, 3),
+      "scaling_efficiency" -> Json.fixed(pr.effCapped, 3))
   }
 
+  def json(pr: PairResult): String = Json.render(fields(pr): _*)
+
+  // 6M convs × 600 turns ≈ 522M canonical / ~1.04 × 10^9 DIRECTED edges —
+  // the north rule's literal "10^9 edges" scale. Bigger is also better for
+  // the efficiency bar: per-iteration parallel work W/c must dominate the
+  // ~25-30 ms/iter stage fixed cost, and each doubling (130M → 261M edges
+  // moved the protocol from 0.798 to ~0.85-0.9) halves the hi leg's
+  // fixed-cost share while the lo leg scales cleanly; density (not vertex
+  // count) raises W per heap byte, keeping the persisted CSR state inside
+  // the 30g child heap
+  private def envConvs: Long =
+    sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "6000000").toLong
+  private def envIters: Int = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
+
   def main(args: Array[String]): Unit = {
-    val nConv = sys.env.getOrElse("SPARK_GRAFT_SCALE_CONVS", "6000000").toLong
-    val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "40").toInt
+    val nConv = envConvs
     val mode = sys.env.get("SPARK_GRAFT_SCALE_MODE")
     if (mode.contains("prep")) {
       prepEdges(nConv, sys.env("SPARK_GRAFT_SCALE_EDGES_DIR"))
-      println("""{"prep":"done"}""")
+      println(Json.render("prep" -> "done"))
       return
     }
     // partition/nd modes run in a properly-heaped child JVM (the parent is
@@ -835,66 +801,51 @@ object Scaling {
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_SCALE_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    // Whole-V-cycle bench at reference scale (the reference's headline is
-    // partitioning a 123.7M-edge graph; ours: the same synthetic link
-    // graph the PR kernel scales on). SPARK_GRAFT_SCALE_MODE=partition
-    // [+ SPARK_GRAFT_SCALE_EDGES_DIR to reuse a prepped graph].
-    if (mode.contains("partition")) {
-      val k = sys.env.getOrElse("SPARK_GRAFT_PART_K", "8").toInt
+    // Whole-job modes, one JSON line each with the wall of the job alone
+    // (graph load and counts untimed); SPARK_GRAFT_SCALE_EDGES_DIR reuses a
+    // prepped graph
+    def wholeJob(job: (SparkSession, DataFrame, DataFrame) => Seq[(String, Any)]): Unit = {
       val spark = session(cpus)
       try {
         val (edges, vids) = loadGraph(spark, nConv)
-        val verts = vids.select(col("vid"), array(lit(1L)).as("vwgts"))
-        val nE = edges.count(); val nV = verts.count()
+        val nE = edges.count(); val nV = vids.count()
         val t0 = System.nanoTime()
-        val r = graft.partitioner.Multilevel.partitionMC(
-          spark, edges, verts, k, ncon = 1)
+        val fields = job(spark, edges, vids)
         val wall = (System.nanoTime() - t0) / 1e9
-        println(s"""{"mode":"partition","cpus":$cpus,"k":$k,""" +
-          s""""vertices":$nV,"edges":$nE,"levels":${r.levels},""" +
-          s""""edge_cut":${r.cut},"imbalance":${f"${r.imbalance}%.4f"},""" +
-          s""""wall_sec":${f"$wall%.1f"}}""")
+        println(Json.render(Seq("mode" -> mode.get, "cpus" -> cpus, "vertices" -> nV,
+          "edges" -> nE) ++ fields :+ ("wall_sec" -> Json.fixed(wall, 1)): _*))
       } finally spark.stop()
-      return
     }
-    // Whole nested-dissection ordering at scale (the reference's third
-    // public API, MTMETIS_NodeND): SPARK_GRAFT_SCALE_MODE=nd
-    // [+ SPARK_GRAFT_SCALE_EDGES_DIR to reuse a prepped graph,
-    //  + SPARK_GRAFT_VSEP_MAXGATHER to lower the separator gather bound so
-    //    the SFG distributed path (greedy flow + gathered SFM) is the one
-    //    measured]. Emits permutation-validity fields next to the wall so
-    //    the bench row is self-checking.
-    if (mode.contains("nd")) {
-      val spark = session(cpus)
-      try {
-        sys.env.get("SPARK_GRAFT_VSEP_MAXGATHER").foreach(g =>
-          spark.conf.set("spark.graft.vsep.maxGather", g))
-        val (edges, verts) = loadGraph(spark, nConv)
-        val nE = edges.count(); val nV = verts.count()
-        val collectThreshold =
-          sys.env.getOrElse("SPARK_GRAFT_ND_COLLECT", "4096").toLong
-        val t0 = System.nanoTime()
-        val perm = graft.partitioner.NestedDissection.order(
-          spark, edges, verts, collectThreshold)
+    mode match {
+      // the whole V-cycle at reference scale (the reference's headline is
+      // partitioning a 123.7M-edge graph; ours: the same synthetic link
+      // graph the PR kernel scales on)
+      case Some("partition") => wholeJob { (spark, edges, vids) =>
+        val r = graft.partitioner.Multilevel.partitionMC(spark, edges,
+          vids.select(col("vid"), array(lit(1L)).as("vwgts")), PartK, ncon = 1)
+        Seq("k" -> PartK, "levels" -> r.levels, "edge_cut" -> r.cut,
+          "imbalance" -> Json.fixed(r.imbalance, 4))
+      }
+      // whole nested-dissection ordering (the reference's third public API,
+      // MTMETIS_NodeND); -Dspark.graft.vsep.maxGather=<n> (the forked child
+      // inherits -D flags) lowers the separator gather bound so the SFG
+      // distributed path (greedy flow + gathered SFM) is the one measured.
+      // Emits permutation-validity fields so the row is self-checking.
+      case Some("nd") => wholeJob { (spark, edges, vids) =>
+        val perm = graft.partitioner.NestedDissection.order(spark, edges, vids)
         // validity forced as part of the measured run: a permutation of
         // [0, n) — n rows, n distinct labels, min 0, max n-1
         val v = perm.agg(count(lit(1)), countDistinct(col("perm")),
           min(col("perm")), max(col("perm"))).head()
-        val wall = (System.nanoTime() - t0) / 1e9
         val m = graft.plans.Metrics.snapshot()
           .filter { case (k, _) => k.startsWith("vsep_") || k.startsWith("m3_") }
-          .toSeq.sorted
-          .map { case (k, c) => s""""$k":$c""" }.mkString(",")
-        println(s"""{"mode":"nd","cpus":$cpus,"vertices":$nV,""" +
-          s""""edges":$nE,"perm_rows":${v.getLong(0)},""" +
-          s""""perm_distinct":${v.getLong(1)},"perm_min":${v.getLong(2)},""" +
-          s""""perm_max":${v.getLong(3)},"collect_threshold":$collectThreshold,""" +
-          s""""wall_sec":${f"$wall%.1f"},"metrics":{$m}}""")
-      } finally spark.stop()
-      return
-    }
-    sys.env.get("SPARK_GRAFT_SCALE_CPUS") match {
-      case Some(c) => // single-run mode (one parallelism level per JVM)
+        Seq("perm_rows" -> v.getLong(0), "perm_distinct" -> v.getLong(1),
+          "perm_min" -> v.getLong(2), "perm_max" -> v.getLong(3),
+          "collect_threshold" -> graft.partitioner.NestedDissection.DefaultCollect,
+          "metrics" -> Json.Obj(m.toSeq.sorted))
+      }
+      // single-run mode (one parallelism level per JVM)
+      case _ if sys.env.contains("SPARK_GRAFT_SCALE_CPUS") =>
         // failure-injection hook (harness testing only): kill this child
         // deterministically so pairForked's crashed-leg tolerance can be
         // exercised end-to-end — SPARK_GRAFT_SCALE_FAIL_FORK=<k> crashes
@@ -902,18 +853,8 @@ object Scaling {
         if (sys.env.get("SPARK_GRAFT_SCALE_FAIL_FORK").exists(f =>
             sys.env.get("SPARK_GRAFT_SCALE_FORK_IDX").contains(f)))
           sys.exit(17)
-        val r = run(c.toInt, nConv, iters)
-        println(s"""{"cpus":${r.cpus},"vertices":${r.vertices},""" +
-          s""""edges":${r.edges},"pr_iters":${r.iters},""" +
-          s""""seconds":${f"${r.seconds}%.2f"},""" +
-          s""""iters_per_sec":${f"${r.itersPerSec}%.3f"},""" +
-          s""""trial_secs":${jsonArr(r.trialSecs)},""" +
-          s""""trial_iter_meds":${jsonArr(r.trialIterMeds, "%.1f")},""" +
-          s""""iter_ms":${jsonArr(r.iterMs, "%.1f")}}""")
-      case None =>
-        val cpusLo = sys.env.getOrElse("SPARK_GRAFT_SCALE_LO", "4").toInt
-        println(json(pairForked(cpusLo = cpusLo, cpusHi = 4 * cpusLo,
-          nConv = nConv, iters = iters)))
+        println(runJson(run(cpus, nConv, envIters)))
+      case _ => println(json(pairForked()))
     }
   }
 }

@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxPlanStringLength", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Local.session(Local.cpus, Local.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
@@ -23,21 +15,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      plans.Json.render(SparkEntry.oracleSql.toSeq: _*))
     spark.stop()
   }
 }

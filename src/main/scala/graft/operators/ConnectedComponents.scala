@@ -63,7 +63,7 @@ object ConnectedComponents {
       // plan (and driver heap) grows superlinearly with rounds
       val next = smallStar(next0).ckpt()
       val nextSig = signature(next)
-      ckpt.foreach { c => c.write("cc_pairs", round + 1, next, Double.NaN) }
+      ckpt.foreach { c => c.write("cc_pairs", round + 1, next) }
       converged = nextSig == sig
       sig = nextSig
       pairs.unpersist()

@@ -25,11 +25,14 @@ import graft.operators.GraphOps
   */
 object NestedDissection {
 
+  /** Default `collectThreshold` of [[order]]. */
+  val DefaultCollect: Long = 4096
+
   /** Distributed entry point. `collectThreshold`: subgraphs at or below
     * this size are gathered to the driver and ordered serially.
     */
   def order(spark: SparkSession, edges: DataFrame, vertices: DataFrame,
-            collectThreshold: Long = 4096, leafSize: Int = 32,
+            collectThreshold: Long = DefaultCollect, leafSize: Int = 32,
             seed: Long = 42L): DataFrame = {
     val verts = vertices.select(col("vid")).ckpt()
     val es = edges.select(col("src"), col("dst"), col("wgt"))

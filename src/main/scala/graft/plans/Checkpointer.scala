@@ -59,11 +59,11 @@ final class Checkpointer(spark: SparkSession, root: String,
 
   def logMetrics(step: String, iter: Int, rows: Long,
                  residual: Double, partCounts: Seq[(Int, Long)]): Unit = {
-    val parts = partCounts.map { case (p, n) => s"""{"pid":$p,"rows":$n}""" }
-      .mkString("[", ",", "]")
-    val line = s"""{"step":"$step","iter":$iter,"rows":$rows,""" +
-      s""""residual":$residual,"wall_ms":${System.currentTimeMillis()},""" +
-      s""""partitions":$parts}""" + "\n"
+    // a NaN residual (the init snapshot, CC rounds) is written as null
+    val line = Json.render("step" -> step, "iter" -> iter, "rows" -> rows,
+      "residual" -> residual, "wall_ms" -> System.currentTimeMillis(),
+      "partitions" -> partCounts.map { case (p, n) =>
+        Json.Obj(Seq("pid" -> p, "rows" -> n)) }) + "\n"
     Files.writeString(ledger, line, StandardOpenOption.CREATE,
       StandardOpenOption.APPEND)
   }

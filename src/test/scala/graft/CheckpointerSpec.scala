@@ -79,6 +79,14 @@ class CheckpointerSpec extends SparkSpec {
       assert(l.contains("\"step\":\"hm\"") && l.contains("\"rows\":8"))
       assert(l.contains("\"partitions\":[{"), "per-partition lineage present")
     }
+    // every row is strict JSON: the init snapshot has no residual (null,
+    // never a bare NaN token), each iteration row a numeric one
+    val rows = lines.map(graft.plans.Json.parse)
+    assert(rows.head.get("residual").isNull, lines.head)
+    for (r <- rows.tail) assert(r.get("residual").isNumber, r)
+    assert(rows.map(_.get("iter").asInt) == Seq(0, 1, 2))
+    assert(rows.forall(_.get("partitions").elements().asScala
+      .map(_.get("rows").asLong).sum == 8L), "lineage rows sum to the total")
     // early-stop on residual: converged path stops before maxIter
     val c2 = new Checkpointer(spark, tmp())
     val out = c2.iterate("hm", labels0, maxIter = 50, tol = 0.0)(

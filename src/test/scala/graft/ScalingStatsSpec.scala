@@ -4,12 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The scaling-efficiency estimator is the round's gate statistic — pin its
   * math down without a SparkSession: median, the per-fork
-  * min-of-trial-medians regrouping, and PairResult's robust/wall/capped
-  * efficiency selection (protocol doc: BASELINE.md "Scaling measurement
-  * protocol").
+  * min-of-trial-medians, and PairResult's robust/wall/capped efficiency
+  * selection (protocol doc: BASELINE.md "Scaling measurement protocol").
+  * Every emitted line must also parse as strict JSON.
   */
 class ScalingStatsSpec extends AnyFunSuite {
   import Scaling.{RunResult, PairResult}
+
+  /** `Scaling.json(pr)`, checked to parse strictly (no bare NaN) */
+  private def json(pr: PairResult): String = {
+    val j = Scaling.json(pr)
+    graft.plans.Json.parse(j)
+    j
+  }
 
   test("median: odd, even, empty") {
     assert(Scaling.median(Seq(3.0, 1.0, 2.0)) == 2.0)
@@ -17,12 +24,12 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(Scaling.median(Nil).isNaN)
   }
 
-  test("iterMedianMs regroups samples by trial and takes min of trial medians") {
-    // 3 trials x 3 iters; trial medians 20, 700, 30 -> a single clean trial
-    // (the first) must win even when later trials are noise-buried
+  test("iterMedianMs takes the min of the per-trial medians") {
+    // trial medians 20, 700, 30 -> a single clean trial (the first) must
+    // win even when later trials are noise-buried
     val r = RunResult(cpus = 4, vertices = 10, edges = 10, iters = 3,
       seconds = 1.0, trialSecs = Seq(1.0, 2.0, 3.0),
-      iterMs = Seq(10, 20, 1000, 650, 700, 800, 25, 30, 40))
+      trialIterMeds = Seq(20, 700, 30))
     assert(r.iterMedianMs == 20.0)
   }
 
@@ -33,8 +40,8 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(r.teps == 2.0 * 1000 * 10 / 2.0)
   }
 
-  private def fork(cpus: Int, iters: Int, ms: Seq[Double], wall: Double) =
-    RunResult(cpus, 10, 10, iters, wall, Seq(wall), ms)
+  private def fork(cpus: Int, iters: Int, meds: Seq[Double], wall: Double) =
+    RunResult(cpus, 10, 10, iters, wall, Seq(wall), trialIterMeds = meds)
 
   test("effRobust = (medLo/medHi)/(cpusHi/cpusLo), min over forks per level") {
     // lo forks: medians 400 and 380 -> 380; hi forks: 120 and 100 -> 100
@@ -66,16 +73,21 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(pr.effRobust.isNaN)
     assert(math.abs(pr.eff - (8.0 / 2.5) / 4.0) < 1e-12)
     assert(math.abs(pr.effWall - pr.eff) < 1e-12)
+    // no per-iteration medians: the median fields are null, not bare NaN
+    val j = json(pr)
+    assert(j.contains("\"iter_ms_med_lo\":null"), j)
+    assert(j.contains("\"fork_iter_med_hi\":[null]"), j)
+    assert(j.contains("\"scaling_efficiency\":0.800"), j)
   }
 
-  test("iterMedianMs prefers explicit per-trial medians (capped trials)") {
-    // flat samples would regroup as trials of 3 and read min 20; the
-    // explicit medians (e.g. from a wall-capped trial with fewer samples)
-    // must win
-    val r = RunResult(4, 10, 10, 3, 1.0, Seq(1.0),
-      iterMs = Seq(20, 20, 20, 700, 700, 700),
-      trialIterMeds = Seq(25.0, 700.0))
+  test("iterMedianMs skips NaN trial medians (empty drains)") {
+    // a trial whose listener drain came back empty has median NaN; it
+    // must neither win nor poison the min, and all-NaN reads as no samples
+    val r = RunResult(4, 10, 10, 3, 1.0, Seq(1.0, 1.0, 1.0),
+      trialIterMeds = Seq(Double.NaN, 25.0, 700.0))
     assert(r.iterMedianMs == 25.0)
+    assert(RunResult(4, 10, 10, 3, 1.0, trialIterMeds = Seq(Double.NaN))
+      .iterMedianMs.isNaN)
   }
 
   test("effWall normalizes per iteration when legs run unequal counts") {
@@ -94,7 +106,7 @@ class ScalingStatsSpec extends AnyFunSuite {
       loForks = Seq(fork(4, 3, Seq(400, 400, 400), 1.2)),
       hiForks = Seq(fork(16, 3, Seq(100, 100, 100), 0.3)),
       cpusLo = 4, cpusHi = 16)
-    val j = Scaling.json(pr)
+    val j = json(pr)
     for (k <- Seq("scaling_efficiency", "scaling_efficiency_raw",
         "wall_scaling_efficiency", "fork_iter_med_lo", "fork_iter_med_hi",
         "trials_lo", "trials_hi", "iters_per_sec_lo", "iters_per_sec_hi",
@@ -117,7 +129,7 @@ class ScalingStatsSpec extends AnyFunSuite {
     assert(math.abs(pr.gapLo - (400.0 / 380.0 - 1.0)) < 1e-12)
     // one hi fork -> gap undefined -> +inf in code, null in the JSON
     assert(pr.gapHi.isInfinite)
-    val j = Scaling.json(pr)
+    val j = json(pr)
     assert(j.contains("\"conv_gap_lo\":0.0526"), j)
     assert(j.contains("\"conv_gap_hi\":null"), j)
     // per-fork trial counts are emitted (short redraws auditable)
@@ -133,9 +145,22 @@ class ScalingStatsSpec extends AnyFunSuite {
         fork(16, 3, Seq(100, 100, 100), 0.3)),
       cpusLo = 4, cpusHi = 16)
     assert(pr.gapLo.isNaN)
-    val j = Scaling.json(pr)
+    val j = json(pr)
     assert(j.contains("\"conv_gap_lo\":null"), j)
     assert(j.contains("\"conv_gap_hi\":0.0000"), j)
+  }
+
+  test("a forked child's result line round-trips through strict JSON") {
+    val r = RunResult(4, 2500, 490000, 40, 12.34, Seq(12.34, 15.5),
+      trialIterMeds = Seq(300.5, 380.0))
+    // the parent reads the LAST line: Spark may print to stdout before it
+    val back = Scaling.parseRun("some log line\n" + Scaling.runJson(r) + "\n\n")
+    assert(back == r)
+    assert(Scaling.runJson(r).contains("\"trial_secs\":[12.34,15.50]"))
+    assert(Scaling.parseRun(Scaling.runJson(r.copy(trialIterMeds = Nil)))
+      .iterMedianMs.isNaN)
+    assert(intercept[RuntimeException](Scaling.parseRun("{\"cpus\":4}"))
+      .getMessage.contains("no vertices"))
   }
 
   test("resumeKeyMatches keeps a matching key file, deletes a stale one") {
